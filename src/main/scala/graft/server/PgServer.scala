@@ -1,6 +1,7 @@
 package graft.server
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream, EOFException}
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
@@ -97,6 +98,8 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
   private def tlsContext: Option[javax.net.ssl.SSLContext] = tlsMaterial.map(_._1)
 
   private val RowLimit = 1024 // reference DEFAULT_ROW_LIMIT
+  // per-direction socket buffer of an authenticated connection
+  private val IoBufferBytes = 64 * 1024
 
   /** Bounded ring of recently received statement texts (simple-protocol
     * buffers and extended-protocol Parse bodies) — lets integration
@@ -186,9 +189,11 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
   @volatile private var lastAcceptErrorLogNanos = System.nanoTime() - 6000000000L
 
   private def handle(sock: Socket): Unit = {
-    var in = new DataInputStream(sock.getInputStream)
-    var rawOut = new DataOutputStream(sock.getOutputStream)
-    var out = new PgWire.Out(rawOut)
+    // the socket's own streams, or their TLS upgrade
+    var rawIn = sock.getInputStream
+    var rawOut = sock.getOutputStream
+    var in = new DataInputStream(rawIn)
+    var out = new PgWire.Out(new DataOutputStream(rawOut))
     val pid = pidCounter.incrementAndGet()
     var connSess: SparkSession = null // for release on disconnect
     // tls-server-end-point data once the connection upgrades to TLS:
@@ -197,21 +202,22 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
     try {
       var st = PgWire.readStartup(in)
       if (st.code == 80877104) { // GSSENCRequest: decline, client falls back
-        rawOut.writeByte('N'); rawOut.flush()
+        rawOut.write('N'); rawOut.flush()
         st = PgWire.readStartup(in)
       }
       if (st.code == 80877103) { // SSLRequest
         tlsContext match {
           case Some(ctx) => // accept and upgrade the socket in place
-            rawOut.writeByte('S'); rawOut.flush()
+            rawOut.write('S'); rawOut.flush()
             val ssl = ctx.getSocketFactory
               .createSocket(sock, null, sock.getPort, false)
               .asInstanceOf[javax.net.ssl.SSLSocket]
             ssl.setUseClientMode(false)
             ssl.startHandshake()
-            in = new DataInputStream(ssl.getInputStream)
-            rawOut = new DataOutputStream(ssl.getOutputStream)
-            out = new PgWire.Out(rawOut)
+            rawIn = ssl.getInputStream
+            rawOut = ssl.getOutputStream
+            in = new DataInputStream(rawIn)
+            out = new PgWire.Out(new DataOutputStream(rawOut))
             // RFC 5929 tls-server-end-point MUST hash the certificate
             // this handshake actually SERVED: with a multi-key-entry
             // keystore the JSSE KeyManager may pick a different alias
@@ -227,7 +233,7 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
               })
               .orElse(tlsMaterial.flatMap(m => Option(m._2)))
           case None => // decline, client retries plain
-            rawOut.writeByte('N'); rawOut.flush()
+            rawOut.write('N'); rawOut.flush()
         }
         st = PgWire.readStartup(in)
       }
@@ -241,6 +247,16 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         }
         return
       }
+      // negotiation (and any TLS upgrade) is over, so no plaintext byte
+      // can sit in a buffer across it: from here both directions are
+      // buffered, and bytes leave only at an explicit flush
+      // (ReadyForQuery, Flush, CopyInResponse, auth prompts, errors,
+      // close) or when the buffer fills. NODELAY so a flushed reply is
+      // not held back waiting for the client's delayed ACK.
+      sock.setTcpNoDelay(true)
+      in = new DataInputStream(new BufferedInputStream(rawIn, IoBufferBytes))
+      out = new PgWire.Out(new DataOutputStream(
+        new BufferedOutputStream(rawOut, IoBufferBytes)))
       val user = st.params.getOrElse("user", "")
       if (!authenticate(in, out, user, connCbind)) return
 
@@ -408,6 +424,8 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
       // connection gone: nothing can read a suspended portal anymore,
       // so unconditionally drop this session's tracked cache entries
       if (connSess != null) graft.util.Persist.release(connSess)
+      // replies still buffered (e.g. to messages before Terminate)
+      try out.flush() catch { case _: Throwable => }
       sock.close()
     }
   }

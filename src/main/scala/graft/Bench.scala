@@ -1,24 +1,30 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** Dev series over the registered queries: an sf0.001 warm-up pass,
+  * then two interleaved passes at `SPARK_GRAFT_SF_DIR`, min-of-2
+  * `.count()` seconds per query. `runMain graft.Bench` runs all of
+  * them; `runMain graft.Bench q46_part_affinity v09_pq_adc_knn` runs
+  * the same methodology over just the named queries and also prints
+  * one line per query. A query that throws in either pass is listed
+  * under `"failed"` and kept out of `queries` and `total`.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (name, _) => args.isEmpty || args.contains(name) }
+      .sortBy(_._1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
     // JVM/session warmup (codegen, scan init, JTS + kernel classloading)
     // so the first measured query of each stack isn't charged seconds of
     // one-time cost
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10).count()
     spark.sql("SELECT count(*) FROM range(1000000)").collect()
-    graft.spatial.SpatialFunctions.registerAll(spark)
-    graft.functions.SketchFunctions.registerAll(spark)
     val warm = spark.range(0, 64).selectExpr("id",
       "st_makepoint(cast(id % 8 as double), cast(id div 8 as double)) AS pt")
     graft.operators.SpatialJoin.broadcastJoin(
@@ -115,13 +121,13 @@ object Bench {
     val probeEvery = 40
     def pass(dir: String = sfDir,
         probes: Option[scala.collection.mutable.Buffer[(Int, Double)]] = None)
-        : Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
+        : Seq[(String, (Double, Boolean))] =
+      selected.zipWithIndex.map {
         case ((name, fn), i) =>
           probes.foreach { b =>
             if (i % probeEvery == 0) b += ((i, calibrate()))
           }
-          name -> runOnce(name, (s: SparkSession, _: String) => fn(s, dir))._1
+          name -> runOnce(name, (s: SparkSession, _: String) => fn(s, dir))
       }
     // Warm-up pass at the smallest fixture (round-11 judge ask #3):
     // r11's pass1 ran 75% over pass2 on a calibration-stable box — all
@@ -146,13 +152,19 @@ object Bench {
     val p1 = pass(probes = Some(probes1))
     spark.catalog.clearCache() // drop pass-1 persisted intermediates
     val p2 = pass(probes = Some(probes2))
+    // a query that threw in either pass has no cost to report — its
+    // time-to-crash stays out of every total, median and min-of-2
+    val failed = p1.zip(p2).collect {
+      case ((n, (_, okA)), (_, (_, okB))) if !(okA && okB) => n }
+    val ok1 = p1.collect { case (n, (t, _)) if !failed.contains(n) => n -> t }
+    val ok2 = p2.collect { case (n, (t, _)) if !failed.contains(n) => n -> t }
     // both single-pass totals ride along in the artifact (judge ask,
     // round 9 #3): the box swings ~20% run-to-run, so the pass spread
     // is the noise band a round-over-round comparison must ignore —
     // regressions are computed on the per-query MIN, which is the
     // machine's real cost
-    val totalPass1 = p1.map(_._2).sum
-    val totalPass2 = p2.map(_._2).sum
+    val totalPass1 = ok1.map(_._2).sum
+    val totalPass2 = ok2.map(_._2).sum
     // per-pass medians (round-11 judge ask #3): with first-touch cost
     // pre-paid by the warmup, pass1/pass2 median ratio near 1 certifies
     // the box was stable THROUGH the run; a residual gap is
@@ -161,15 +173,14 @@ object Bench {
     def medianOf(xs: Seq[Double]): Double = {
       val s = xs.sorted; if (s.isEmpty) 0.0 else s(s.size / 2)
     }
-    val medianPass1 = medianOf(p1.map(_._2))
-    val medianPass2 = medianOf(p2.map(_._2))
-    val measured = p1.zip(p2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
+    val medianPass1 = medianOf(ok1.map(_._2))
+    val medianPass2 = medianOf(ok2.map(_._2))
+    val measured = ok1.zip(ok2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
     // Outlier tripwire: any query >10x the run median is almost always a
     // plan defect (exponential lineage, a rogue global window, a missed
     // broadcast), not honest work — surface it loudly so the next d24
     // can't land silently behind a green correctness row.
-    val times = measured.map(_._2).sorted
-    val median = times(times.size / 2)
+    val median = medianOf(measured.map(_._2))
     // Attribution re-run (round-8's d15 lesson: one 5.7 s bench outlier
     // measured 2.5 s in the same-code scale smoke): suspect queries are
     // re-measured after the session residue is cleared (cache, tracked
@@ -264,7 +275,7 @@ object Bench {
     // 1 says the delta co-moves with box drift rather than a plan
     // change — separating "co-moves with drift" from "unexplained"
     // without judge archaeology.
-    val sortedNames = measured.map(_._1)
+    val sortedNames = p1.map(_._1)
     def driftAt(series: Seq[(Int, Double)], qIndex: Int): Double =
       series.headOption.fold(1.0) { case (_, first) =>
         val local = series.takeWhile(_._1 <= qIndex).lastOption
@@ -306,6 +317,7 @@ object Bench {
     }.mkString("{", ",", "}")
     // env-supplied paths land inside JSON strings — escape them
     def jstr(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // The driver tail-captures only ~2.2 KB of stdout, so the full
     // per-query map goes to a sidecar file; stdout carries only short,
     // individually parseable lines (pointer + total).
@@ -332,8 +344,18 @@ object Bench {
         s""""attribution":$attributionJson,""" +
         s""""delta_vs_prev":${jmap(deltas)},""" +
         s""""regressions":${jmap(regressions)},""" +
+        s""""failed":$failedJson,""" +
         s""""queries":$qs}\n""")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    if (args.nonEmpty) {
+      val reported = results.toMap
+      p1.zip(p2).foreach { case ((q, (a, okA)), (_, (b, okB))) =>
+        reported.get(q) match {
+          case Some(t) => println(f"$q%-35s ${t}%.3f s (p1 $a%.3f, p2 $b%.3f)")
+          case None => println(f"$q%-35s FAILED (p1 ok=$okA%b $a%.3fs, p2 ok=$okB%b $b%.3fs)")
+        }
+      }
+    }
     println(s"""{"metric":"per_query","unit":"sec","file":"$perQueryPath","n":${results.size}}""")
     println(s"""{"metric":"outliers","threshold":"10x_median","median":$median,"n":${outliers.size},"queries":${jmap(outliers.take(3))}}""")
     println(s"""{"metric":"regressions_vs_prev","n":${regressions.size},"queries":${jmap(regressions.take(3))}}""")
@@ -341,7 +363,8 @@ object Bench {
       s""""total_pass1":${fmt(totalPass1)},"total_pass2":${fmt(totalPass2)},""" +
       s""""calibration_start_s":${fmt(calibrationStart)},""" +
       s""""calibration_end_s":${fmt(calibrationEnd)},""" +
-      s""""baseline_source":"${jstr(baselineSource)}","sf":"${jstr(sfDir)}"}""")
+      s""""baseline_source":"${jstr(baselineSource)}","sf":"${jstr(sfDir)}",""" +
+      s""""failed":$failedJson}""")
     spark.stop()
   }
 

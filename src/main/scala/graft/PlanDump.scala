@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
   * the plan-evidence artifacts the optimization rounds commit under
@@ -20,16 +19,8 @@ object PlanDump {
       case Some("all") | None => SparkEntry.queries.keys.toSeq.sorted
       case Some(s)            => s.split("\\s+").toSeq.filter(_.nonEmpty)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.spatial.SpatialFunctions.registerAll(spark)
-    graft.functions.SketchFunctions.registerAll(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     qs.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -59,16 +59,8 @@ object ScaleSmoke {
     val queries = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split("\\s+").toSeq).getOrElse(DefaultQueries)
       .filterNot(Set("st_hourly_event_counts", "federation_duckdb"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
-    graft.spatial.SpatialFunctions.registerAll(spark)
-    graft.functions.SketchFunctions.registerAll(spark)
 
     synthesize(spark, base, outDir, factor)
 

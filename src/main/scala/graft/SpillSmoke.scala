@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Memory-pressure spill smoke — the 100 TB posture's "Spark spills
@@ -65,19 +64,15 @@ object SpillSmoke {
       .map(_.split("\\s+").toSeq).getOrElse(DefaultQueries)
     val fraction =
       sys.env.getOrElse("SPARK_GRAFT_MEMORY_FRACTION", "0.3")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
     // tight unified-memory region forces the hash/sort/join operators
-    // onto their spill paths without starving user/JVM memory entirely
-    if (mode == "constrained") builder.config("spark.memory.fraction", fraction)
-    val spark = builder.getOrCreate()
+    // onto their spill paths without starving user/JVM memory entirely;
+    // a static conf, so it goes in as a spark.* system property, which
+    // the session's SparkConf reads at construction
+    if (mode == "constrained") sys.props("spark.memory.fraction") = fraction
+    val spark = Graft.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
-    graft.spatial.SpatialFunctions.registerAll(spark)
-    graft.functions.SketchFunctions.registerAll(spark)
+    val memoryFraction =
+      spark.sparkContext.getConf.get("spark.memory.fraction", "default")
     // ×N replica mode: synthesize (or reuse — the marker file makes it
     // idempotent, so the comfortable-heap baseline pass pays the build)
     // and measure against it
@@ -153,10 +148,10 @@ object SpillSmoke {
       }
       val totalDisk = results.map(_._5).sum
       val json =
-        s"""{"heap_mb":$heapMb,"memory_fraction":"$fraction","cpus":$cpus,"sf_dir":"$dataDir","scale_factor":${scaleFactor.getOrElse(1)},"all_match":$allOk,"total_spill_disk_bytes":$totalDisk,"queries":{${rows.mkString(",")}}}\n"""
+        s"""{"heap_mb":$heapMb,"memory_fraction":"$memoryFraction","cpus":$cpus,"sf_dir":"$dataDir","scale_factor":${scaleFactor.getOrElse(1)},"all_match":$allOk,"total_spill_disk_bytes":$totalDisk,"queries":{${rows.mkString(",")}}}\n"""
       java.nio.file.Files.write(java.nio.file.Paths.get("SPILL_SMOKE.json"),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"""{"metric":"spill_smoke","n":${results.size},"all_match":$allOk,"total_spill_disk_bytes":$totalDisk,"heap_mb":$heapMb}""")
+      println(s"""{"metric":"spill_smoke","n":${results.size},"all_match":$allOk,"total_spill_disk_bytes":$totalDisk,"heap_mb":$heapMb,"memory_fraction":"$memoryFraction"}""")
     }
     spark.stop()
   }

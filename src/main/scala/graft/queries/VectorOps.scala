@@ -440,10 +440,11 @@ object VectorOps {
          |  FROM adc)""".stripMargin
   }
 
-  /** Spark side of the shared PQ machinery: the (q_id, vec_id, adc_d2)
-    * ADC candidate sums (see v09's scaladoc for the design notes). */
-  private def pqAdc(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d).select(col("vec_id"), col("emb"))
+  /** Spark side of the shared PQ encoding (v09 via [[pqAdc]], v15):
+    * `code` is each vector's (vec_id, m, c) codebook pick per subspace
+    * and `lut` the probes' (q_id, m, c, d2) distance table. */
+  private def pqCodes(emb: DataFrame): (DataFrame, DataFrame) = {
+    val e = emb.select(col("vec_id"), col("emb"))
     val ms = explode(sequence(lit(0), lit(7))).as("m")
     val cb = e.filter(col("vec_id").between(100, 103))
       .select((col("vec_id") - 100).as("c"), col("emb"))
@@ -469,6 +470,13 @@ object VectorOps {
       .withColumn("d2", expr(
         "aggregate(zip_with(svec, cvec, (a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"))
       .select(col("vec_id").as("q_id"), col("m"), col("c"), col("d2"))
+    (code, lut)
+  }
+
+  /** The (q_id, vec_id, adc_d2) ADC candidate sums (see v09's scaladoc
+    * for the design notes). */
+  private def pqAdc(s: SparkSession, d: String): DataFrame = {
+    val (code, lut) = pqCodes(embeddings(s, d))
     code.join(broadcast(lut), Seq("m", "c"))
       .where(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
@@ -1031,31 +1039,13 @@ object VectorOps {
         .withColumn("cr", row_number().over(wProbe))
         .filter(col("cr") <= 2)
         .select(col("q_id"), col("c_id").as("list_id"))
-      val ms = explode(sequence(lit(0), lit(7))).as("m")
-      val cb = e.filter(col("vec_id").between(100, 103))
-        .select((col("vec_id") - 100).as("pc"), ms, col("emb"))
-        .select(col("pc"), col("m"), expr("slice(emb, m * 8 + 1, 8)").as("cvec"))
-      val sub = e.select(col("vec_id"), ms, col("emb"))
-        .select(col("vec_id"), col("m"), expr("slice(emb, m * 8 + 1, 8)").as("svec"))
-      // per-row argmin over the per-subspace codebook (see pqAdc):
-      // replaces the 4x fan-out + (vec_id, m) rank window
-      val cbArr = cb.groupBy(col("m"))
-        .agg(array_sort(collect_list(struct(col("pc"), col("cvec")))).as("cbarr"))
-      val code = sub.join(broadcast(cbArr), Seq("m"))
-        .select(col("vec_id"), col("m"), expr(
-          """array_min(transform(cbarr, cc -> struct(
-            |  aggregate(zip_with(svec, cc.cvec, (a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x) AS o,
-            |  cc.pc AS pc))).pc""".stripMargin).as("pc"))
-      val lut = sub.filter(col("vec_id") < 10).join(broadcast(cb), Seq("m"))
-        .withColumn("d2", expr(
-          "aggregate(zip_with(svec, cvec, (a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"))
-        .select(col("vec_id").as("q_id"), col("m"), col("pc"), col("d2"))
+      val (code, lut) = pqCodes(e)
       val cand = assign.join(broadcast(pl), Seq("list_id"))
         .where(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"), col("list_id"))
       val adc = cand
         .join(code, Seq("vec_id"))
-        .join(broadcast(lut), Seq("q_id", "m", "pc"))
+        .join(broadcast(lut), Seq("q_id", "m", "c"))
         .groupBy(col("q_id"), col("vec_id"), col("list_id"))
         .agg(dsum(col("d2")).as("adc_d2"))
       TopK.topK(adc, Seq("q_id"), col("adc_d2"), col("vec_id"), 5,

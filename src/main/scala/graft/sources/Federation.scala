@@ -260,9 +260,6 @@ object Federation {
       .option("prefer_timestamp_ntz", session.conf
         .getOption("spark.graft.federation.pg_prefer_timestamp_ntz")
         .getOrElse("false"))
-      .option("result_format", session.conf
-        .getOption("spark.graft.federation.pg_result_format")
-        .getOrElse("binary"))
       .option("sslmode", sslMode)
       .option("table", scan.table)
     val withCa = sslRootCert.fold(reader)(reader.option("sslrootcert", _))

@@ -110,8 +110,8 @@ object SpatialFunctions extends Serializable {
 
     // ---- accessors (udfs.rs:11-166) ----
     // scalar accessors ride native Catalyst expressions (StScalarExpr):
-    // a same-JVM A/B (StMicroBench) puts the ScalaUDF wrapper at ~5% of
-    // st_area's per-row cost — the win is structural: accessor filters
+    // the round-9 same-JVM A/B (COVERAGE_HISTORY.md, row A21-A27) puts
+    // the ScalaUDF wrapper at ~5% of st_area's per-row cost — the win is structural: accessor filters
     // stay inside one whole-stage-codegen span instead of splitting it
     def addScalar(name: String): Unit =
       reg.createOrReplaceTempFunction(name, (children: Seq[Expression]) => {

@@ -7,12 +7,12 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerTyp
 /** Native Catalyst expressions for the scalar geometry ACCESSORS
   * (st_area, st_length, st_x/st_y, envelope bounds, st_isvalid, ...)
   * and the st_distance metric — the reference's udfs.rs:11-166 scalar
-  * surface on its hot path. Round-9 measurement (graft.StMicroBench)
-  * put the ScalaUDF wrapper at ~34% of st_area's per-row cost (956k
-  * rows/s wrapped vs 1.45M bare JTS): for the cheap accessors the arg
-  * boxing + interpretation barrier is a visible share of the work,
-  * unlike the constructive functions (st_intersection 0.1% wrapper
-  * share) where JTS itself dominates. Lifting the accessors keeps a
+  * surface on its hot path. The round-9 measurement (COVERAGE_HISTORY.md,
+  * row A21-A27) put the ScalaUDF wrapper at ~5% of st_area's per-row
+  * cost in a same-JVM A/B: for the cheap accessors the arg boxing +
+  * interpretation barrier is a visible share of the work, unlike the
+  * constructive functions (st_intersection 0.1% wrapper share) where
+  * JTS itself dominates. Lifting the accessors keeps a
   * filter like `st_area(g) > 10` inside one whole-stage-codegen span.
   *
   * Result nullability differs per function (st_x of a non-point and

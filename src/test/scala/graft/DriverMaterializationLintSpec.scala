@@ -22,6 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * anywhere fails the build until the new site is audited (bounded
   * output, not per-row work) and the budget line updated — the
   * automated form of the review sweep.
+  *
+  * A second case pins the one session factory: `SparkSession.builder`
+  * appears in main code only inside `Graft.session`.
   */
 class DriverMaterializationLintSpec extends AnyFunSuite {
 
@@ -50,26 +53,23 @@ class DriverMaterializationLintSpec extends AnyFunSuite {
     "operators/AnnIndex.scala" -> 1,
     // round 11: + the fixed-work calibration probe — a 1-row sum over
     // range(), collected twice per bench run (start/end box-speed pin)
-    "Bench.scala" -> 2,
-    // round 9: the bench-outlier attribution probe's warmup collect —
-    // a dev diagnostic main, 1 row
-    "BenchProbe.scala" -> 1,
-    // round 13: the subset A/B bench's warmup collect — a dev
-    // diagnostic main (Bench's methodology over named queries), 1 row
-    "MiniBench.scala" -> 1)
+    "Bench.scala" -> 2)
+
+  private val root = java.nio.file.Paths.get("src/main/scala/graft")
+
+  /** (path relative to `root`, source text) of every main source file. */
+  private def sources: Seq[(String, String)] = {
+    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    finally s.close()
+  }
 
   test("driver-side materialization stays within the audited per-file budget") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
-    val files = {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally s.close()
-    }
-    val counts = files.map { p =>
-      val rel = root.relativize(p).toString
-      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val counts = sources.map { case (rel, src) =>
       rel -> Pattern.findAllIn(src).size
     }.filter(_._2 > 0).toMap
     val over = counts.filter { case (f, n) => n > Budget.getOrElse(f, 0) }
@@ -81,5 +81,15 @@ class DriverMaterializationLintSpec extends AnyFunSuite {
     // should shrink the budget so it stays an exact audit record)
     val stale = Budget.filter { case (f, n) => counts.getOrElse(f, 0) < n }
     assert(stale.isEmpty, s"budget entries above actual counts: $stale")
+  }
+
+  test("only Graft builds a session: SparkSession.builder appears in no other main file") {
+    // comments may name the builder (GraftExtensions' scaladoc does);
+    // code may not — every main wires its session through Graft.session
+    val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val builders = sources.collect {
+      case (rel, src) if Comment.replaceAllIn(src, "").contains("SparkSession.builder") => rel
+    }
+    assert(builders == Seq("Graft.scala"), s"SparkSession.builder in code of: $builders")
   }
 }

@@ -495,13 +495,14 @@ class FederationSpec extends GraftSuite {
         .contains("ResultFormat: binary"))
       assert(bin.count() == 3000) // extended protocol: no 1024 cap
       val binRows = spark.sql(s"$q WHERE id < 1000 ORDER BY id").collect()
-      spark.conf.set("spark.graft.federation.pg_result_format", "text")
-      val txtRows = spark.sql(s"$q WHERE id < 1000 ORDER BY id").collect()
-      spark.conf.unset("spark.graft.federation.pg_result_format")
+      val txtRows = spark.read.format(classOf[graft.sources.PgNativeSource].getName)
+        .option("host", "127.0.0.1").option("port", port.toString)
+        .option("database", "postgres").option("table", "fed_bin")
+        .option("result_format", "text").load()
+        .where("id < 1000").orderBy("id").collect()
       assert(binRows.length == 1000 && txtRows.length == 1000)
       binRows.zip(txtRows).foreach { case (b, t) => assert(b == t, s"$b != $t") }
     } finally {
-      spark.conf.unset("spark.graft.federation.pg_result_format")
       spark.conf.unset("spark.graft.federation.pg_native")
       srv.stop()
       spark.catalog.dropTempView("fed_bin")

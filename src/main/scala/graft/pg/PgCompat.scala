@@ -1,6 +1,8 @@
 package graft.pg
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.types._
 
@@ -350,7 +352,11 @@ object PgCompat extends Serializable {
     ("pg_attribute", pgAttributeSchema, () => LiveCatalog.pgAttributeRows()))
 
   /** Register catalog views + compat functions + the `pg_catalog` V2
-    * catalog on the session. */
+    * catalog on the session. Idempotent and cheap after the first call
+    * in a JVM: the views are installed from plans built once (see
+    * [[registerViews]]) and the functions are registered only where
+    * they are missing, so a connection bootstrap or a repeated call on
+    * an installed session runs no Catalyst analysis. */
   def registerAll(spark: SparkSession): Unit = {
     registerViews(spark)
     registerFunctions(spark)
@@ -364,21 +370,56 @@ object PgCompat extends Serializable {
       classOf[InfoSchemaPlugin].getName)
   }
 
+  /** The emulation views' analyzed definitions, built on the first
+    * session that registers them and shared (read-only) by every
+    * session after: the rows are static, so one analysis per JVM
+    * serves every connection. */
+  @volatile private var builtViews: Seq[(String, TemporaryViewRelation)] = _
+
+  private def views(spark: SparkSession): Seq[(String, TemporaryViewRelation)] = {
+    if (builtViews == null) synchronized {
+      if (builtViews == null) {
+        import scala.jdk.CollectionConverters._
+        val catalog = spark.sessionState.catalog
+        builtViews = tableDefs.map { case (name, schema, rows) =>
+          spark.createDataFrame(rows.asJava, schema).createOrReplaceTempView(name)
+          name -> catalog.getRawTempView(name).get
+        }
+      }
+    }
+    builtViews
+  }
+
+  /** (Re)install every emulation view on the session, replacing
+    * whatever it holds under those names. The view definitions are
+    * shared across sessions, but each session's temp-view map is its
+    * own: a view a client creates or replaces stays in that session. */
   def registerViews(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    tableDefs.foreach { case (name, schema, rows) =>
-      spark.createDataFrame(rows.asJava, schema).createOrReplaceTempView(name)
+    val catalog = spark.sessionState.catalog
+    views(spark).foreach { case (name, view) =>
+      catalog.createTempView(name, view, overrideIfExists = true)
     }
   }
 
+  /** Register the PG-compat functions unless the session already has
+    * them. Some deliberately shadow Spark builtins (`version`,
+    * `current_schema`, `current_database`); the builtin entry is
+    * dropped first so the override does not log a "replaced a
+    * previously registered function" warning on every connection. */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
+    // the last function registered below marks a completed registration
+    if (reg.functionExists(FunctionIdentifier("pg_get_viewdef"))) return
+    def register(name: String, builder: Seq[Expression] => Expression): Unit = {
+      reg.dropFunction(FunctionIdentifier(name))
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
     def add(name: String, dt: DataType, arity: Int, fn: AnyRef): Unit =
-      reg.createOrReplaceTempFunction(name, (children: Seq[Expression]) => {
+      register(name, (children: Seq[Expression]) => {
         require(children.size == arity, s"$name expects $arity argument(s)")
         ScalaUDF(fn, dt, children, children.map(_ => None),
           udfName = Some(name), nullable = true, udfDeterministic = true)
-      }, "scala_udf")
+      })
 
     add("version", StringType, 0, () => "PostgreSQL 14.10 on dataclod")
     add("current_schema", StringType, 0, () => "public")
@@ -405,17 +446,17 @@ object PgCompat extends Serializable {
       case _ => null
     })
     // psql sends pg_get_expr with 2 or 3 args depending on its version
-    reg.createOrReplaceTempFunction("pg_get_expr", (children: Seq[Expression]) => {
+    register("pg_get_expr", (children: Seq[Expression]) => {
       require(children.size == 2 || children.size == 3,
         "pg_get_expr expects 2 or 3 arguments")
       ScalaUDF((_: Any, _: Any) => "", StringType, children.take(2),
         children.take(2).map(_ => None), udfName = Some("pg_get_expr"),
         nullable = true, udfDeterministic = true)
-    }, "scala_udf")
+    })
     add("pg_get_partkeydef", StringType, 1, (_: Any) => null)
     // psql \dn+ / \l render ACL arrays via array_to_string(acl, E'\n');
     // accepts the optional third null-replacement argument too
-    reg.createOrReplaceTempFunction("array_to_string", (children: Seq[Expression]) => {
+    register("array_to_string", (children: Seq[Expression]) => {
       require(children.size == 2 || children.size == 3,
         "array_to_string expects 2 or 3 arguments")
       val fn = (arr: Any, sep: Any, nullStr: Any) => (arr, sep) match {
@@ -433,7 +474,7 @@ object PgCompat extends Serializable {
       ScalaUDF(fn, StringType, padded, padded.map(_ => None),
         udfName = Some("array_to_string"), nullable = true,
         udfDeterministic = true)
-    }, "scala_udf")
+    })
     // visibility / ownership probes psql's describe paths make — every
     // table we surface lives in the session and is owned by `postgres`
     add("pg_table_is_visible", BooleanType, 1, (_: Any) => true)

@@ -1682,20 +1682,23 @@ object DedupOps {
     * brute-force vp pair stage (the d-family oracle pattern). */
   private val d24 = QDef(
     "d24_kcore_decomposition", {
+      // MATERIALIZED: each round references the previous round's edge
+      // and survivor sets twice, so inlined CTEs re-run the all-pairs
+      // vp stage exponentially often (see d26)
       def rounds(k: Int): String =
         (1 to 5).map { r =>
           s"""k${k}d$r AS (SELECT src, COUNT(*) AS deg FROM k${k}e${r - 1} GROUP BY src),
-             |k${k}v$r AS (SELECT src FROM k${k}d$r WHERE deg >= $k),
-             |k${k}e$r AS (
+             |k${k}v$r AS MATERIALIZED (SELECT src FROM k${k}d$r WHERE deg >= $k),
+             |k${k}e$r AS MATERIALIZED (
              |  SELECT e.src, e.dst FROM k${k}e${r - 1} e
              |  JOIN k${k}v$r va ON e.src = va.src
              |  JOIN k${k}v$r vb ON e.dst = vb.src)""".stripMargin
         }.mkString(",\n")
       "WITH " + oracleShingleCte + ",\n" +
-        s"""e AS (SELECT a AS src, b AS dst FROM vp
+        s"""e AS MATERIALIZED (SELECT a AS src, b AS dst FROM vp
            |       UNION SELECT b AS src, a AS dst FROM vp),
-           |k2e0 AS (SELECT src, dst FROM e),
-           |k3e0 AS (SELECT src, dst FROM e),
+           |k2e0 AS MATERIALIZED (SELECT src, dst FROM e),
+           |k3e0 AS MATERIALIZED (SELECT src, dst FROM e),
            |${rounds(2)},
            |${rounds(3)},
            |deg0 AS (SELECT src, COUNT(*) AS degree FROM e GROUP BY src),

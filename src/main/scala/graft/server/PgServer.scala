@@ -268,7 +268,9 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
       // above and must not pay a session bootstrap. Temp views the HOST
       // session mounted before serving (Tables.registerViews) are
       // snapshotted in — the PG-permanent-table role; temp views a
-      // client creates stay invisible to every other client.
+      // client creates stay invisible to every other client. The
+      // bootstrap runs no Catalyst analysis: PgCompat installs catalog
+      // views whose plans were built once per JVM.
       val sess = spark.newSession()
       connSess = sess
       // PostgreSQL treats double-quoted tokens as IDENTIFIERS, always —

@@ -168,7 +168,10 @@ object Federation {
         .option("upperBound", p.upper)
         .option("numPartitions", p.numPartitions)
     }
-    withPart.load().queryExecution.logical
+    // the relation load()'s own analysis resolved, describing the remote
+    // table once; its `.logical` is still the unresolved data-source
+    // node, which the outer query would resolve (and describe) again
+    withPart.load().queryExecution.analyzed
   }
 
   /** The pgjdbc-free `postgres_scan` path: parse the DSN-derived JDBC
@@ -270,7 +273,7 @@ object Federation {
         .option("upperBound", p.upper)
         .option("numPartitions", p.numPartitions)
     }
-    withPart.load().queryExecution.logical
+    withPart.load().queryExecution.analyzed // resolved once, as above
   }
 
   /** Form decoding ('+' = space) for ?query parameters — the rule

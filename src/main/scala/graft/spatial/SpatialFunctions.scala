@@ -80,6 +80,15 @@ object SpatialFunctions extends Serializable {
     // warnings into server/bench logs
     if (reg.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier("st_bbox_intersects"))) return
+    // Spark 4.1 ships some st_* names as builtins (st_srid, st_setsrid,
+    // st_geomfromwkb); drop the session's entry before registering over
+    // it, so the override logs no "replaced a previously registered
+    // function" warning on every new session
+    def put(name: String, builder: Seq[Expression] => Expression,
+        source: String): Unit = {
+      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+      reg.createOrReplaceTempFunction(name, builder, source)
+    }
 
     def add(name: String)(cases: (Int, (DataType, AnyRef))*): Unit = {
       val byArity = cases.toMap
@@ -91,7 +100,7 @@ object SpatialFunctions extends Serializable {
         ScalaUDF(fn, dt, children, children.map(_ => None),
           udfName = Some(name), nullable = true, udfDeterministic = true)
       }
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+      put(name, builder, "scala_udf")
     }
 
     // null-safe wrappers
@@ -114,7 +123,7 @@ object SpatialFunctions extends Serializable {
     // the ScalaUDF wrapper at ~5% of st_area's per-row cost — the win is structural: accessor filters
     // stay inside one whole-stage-codegen span instead of splitting it
     def addScalar(name: String): Unit =
-      reg.createOrReplaceTempFunction(name, (children: Seq[Expression]) => {
+      put(name, (children: Seq[Expression]) => {
         require(children.size == 1, s"$name expects 1 argument")
         StScalarExpr(name, children.head)
       }, "built-in")
@@ -148,7 +157,7 @@ object SpatialFunctions extends Serializable {
     // registered as native Catalyst expressions (whole-stage codegen,
     // envelope short-circuit) rather than ScalaUDFs — see StPredicateExpr
     def addPred(regName: String, predName: String): Unit =
-      reg.createOrReplaceTempFunction(regName, (children: Seq[Expression]) => {
+      put(regName, (children: Seq[Expression]) => {
         require(children.size == 2, s"$regName expects 2 arguments")
         StPredicateExpr(predName, children.head, children(1))
       }, "built-in")
@@ -168,7 +177,7 @@ object SpatialFunctions extends Serializable {
     // ---- binary constructive (udfs.rs:248-314) ----
     // st_distance is a native node so distance-comparison join shapes
     // match it structurally (SpatialJoinPlans.extract)
-    reg.createOrReplaceTempFunction("st_distance", (children: Seq[Expression]) => {
+    put("st_distance", (children: Seq[Expression]) => {
       require(children.size == 2, "st_distance expects 2 arguments")
       StDistanceExpr(children.head, children(1))
     }, "built-in")

@@ -77,6 +77,48 @@ class FederationSpec extends GraftSuite {
       s"expected pushdown markers in:\n$physical")
   }
 
+  test("jdbc_scan resolves the relation once: one describe per statement") {
+    val conn = DriverManager.getConnection("jdbc:derby:memory:fedonce;create=true")
+    val st = conn.createStatement()
+    st.execute("CREATE TABLE T3 (ID INT, NAME VARCHAR(20))")
+    st.execute("INSERT INTO T3 VALUES (1, 'alpha'), (2, 'beta')")
+    st.close(); conn.close()
+
+    CountingDerbyDriver.describes.set(0)
+    val df = spark.sql(
+      s"SELECT * FROM jdbc_scan('${CountingDerbyDriver.Prefix}memory:fedonce', " +
+        s"'${classOf[CountingDerbyDriver].getName}', 'T3')")
+    assert(df.collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq ==
+      Seq((1, "alpha"), (2, "beta")))
+    assert(CountingDerbyDriver.describes.get == 1,
+      s"T3's schema should be read once, was read ${CountingDerbyDriver.describes.get} times")
+  }
+
+  test("postgres_scan native client: one describe and one data SELECT per statement") {
+    spark.range(10).selectExpr("id").createOrReplaceTempView("fed_once")
+    val srv = new graft.server.PgServer(spark, port = 0, password = None)
+    val port = srv.start()
+    spark.conf.set("spark.graft.federation.pg_native", "true")
+    try {
+      def describes = srv.recentStatements.filter(_.endsWith("LIMIT 0"))
+      def reads = srv.recentStatements.filter(s =>
+        s.contains("fed_once") && !s.endsWith("LIMIT 0"))
+      def wire = srv.recentStatements.mkString("\n")
+      val df = spark.sql(
+        s"SELECT id FROM postgres_scan('postgres://127.0.0.1:$port', " +
+          "'postgres', 'fed_once')")
+      assert(describes.size == 1 && reads.isEmpty,
+        s"planning should send exactly one describe; saw:\n$wire")
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
+      assert(describes.size == 1 && reads.size == 1,
+        s"executing should add exactly one data SELECT; saw:\n$wire")
+    } finally {
+      spark.conf.unset("spark.graft.federation.pg_native")
+      srv.stop()
+      spark.catalog.dropTempView("fed_once")
+    }
+  }
+
   test("named scans resolve, plan, and name the missing driver") {
     for ((fn, driver) <- Seq(
         ("mysql_scan('mysql://h:3306', 'db', 't')", "mysql"),
@@ -743,4 +785,31 @@ class FederationSpec extends GraftSuite {
     assert(parted.collect().map(_.get(0).toString.toInt).sorted.toSeq ==
       Seq(1, 2, 3))
   }
+}
+
+/** JDBC driver for `jdbc:fedcount:<derby url>` that opens the embedded
+  * Derby database behind it and counts the connections Spark opens to
+  * resolve a relation's schema (`JDBCRDD.resolveTable`). */
+final class CountingDerbyDriver extends java.sql.Driver {
+  import CountingDerbyDriver._
+  override def acceptsURL(url: String): Boolean = url.startsWith(Prefix)
+  override def connect(url: String, info: java.util.Properties): java.sql.Connection =
+    if (!acceptsURL(url)) null
+    else {
+      if (new Throwable().getStackTrace.exists(_.getMethodName == "resolveTable"))
+        describes.incrementAndGet()
+      DriverManager.getConnection("jdbc:derby:" + url.stripPrefix(Prefix), info)
+    }
+  override def getPropertyInfo(url: String,
+      info: java.util.Properties): Array[java.sql.DriverPropertyInfo] = Array.empty
+  override def getMajorVersion: Int = 1
+  override def getMinorVersion: Int = 0
+  override def jdbcCompliant(): Boolean = false
+  override def getParentLogger: java.util.logging.Logger =
+    throw new java.sql.SQLFeatureNotSupportedException()
+}
+
+object CountingDerbyDriver {
+  val Prefix = "jdbc:fedcount:"
+  val describes = new java.util.concurrent.atomic.AtomicInteger()
 }

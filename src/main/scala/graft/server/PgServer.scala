@@ -1,7 +1,7 @@
 package graft.server
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
-  DataOutputStream, EOFException}
+  EOFException}
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
@@ -18,7 +18,9 @@ import graft.spatial.SpatialFunctions
 /** PostgreSQL wire-protocol front end (reference A40-A42:
   * src/server/src/postgres/server.rs, auth.rs, handler.rs): a TCP
   * accept loop, one handler thread per connection, translating SQL text
-  * to `spark.sql` and streaming results back as PG text rows.
+  * to `spark.sql` and streaming results back as PG rows, encoded
+  * straight from Catalyst's internal rows by a per-statement
+  * [[PgWire.ResultEncoder]].
   *
   * Protocol surface mirrored from the reference:
   * - startup: optional SSLRequest (declined with 'N'), MD5 password
@@ -98,8 +100,6 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
   private def tlsContext: Option[javax.net.ssl.SSLContext] = tlsMaterial.map(_._1)
 
   private val RowLimit = 1024 // reference DEFAULT_ROW_LIMIT
-  // per-direction socket buffer of an authenticated connection
-  private val IoBufferBytes = 64 * 1024
 
   /** Bounded ring of recently received statement texts (simple-protocol
     * buffers and extended-protocol Parse bodies) — lets integration
@@ -193,7 +193,7 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
     var rawIn = sock.getInputStream
     var rawOut = sock.getOutputStream
     var in = new DataInputStream(rawIn)
-    var out = new PgWire.Out(new DataOutputStream(rawOut))
+    var out = new PgWire.Out(rawOut)
     val pid = pidCounter.incrementAndGet()
     var connSess: SparkSession = null // for release on disconnect
     // tls-server-end-point data once the connection upgrades to TLS:
@@ -217,7 +217,7 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
             rawIn = ssl.getInputStream
             rawOut = ssl.getOutputStream
             in = new DataInputStream(rawIn)
-            out = new PgWire.Out(new DataOutputStream(rawOut))
+            out = new PgWire.Out(rawOut)
             // RFC 5929 tls-server-end-point MUST hash the certificate
             // this handshake actually SERVED: with a multi-key-entry
             // keystore the JSSE KeyManager may pick a different alias
@@ -254,9 +254,8 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
       // close) or when the buffer fills. NODELAY so a flushed reply is
       // not held back waiting for the client's delayed ACK.
       sock.setTcpNoDelay(true)
-      in = new DataInputStream(new BufferedInputStream(rawIn, IoBufferBytes))
-      out = new PgWire.Out(new DataOutputStream(
-        new BufferedOutputStream(rawOut, IoBufferBytes)))
+      in = new DataInputStream(new BufferedInputStream(rawIn, PgWire.IoBufferBytes))
+      out = new PgWire.Out(new BufferedOutputStream(rawOut, PgWire.IoBufferBytes))
       val user = st.params.getOrElse("user", "")
       if (!authenticate(in, out, user, connCbind)) return
 
@@ -586,13 +585,12 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
   /** A bound portal (sql + args + requested result formats). */
   private final case class Portal(sql: String, args: Seq[Any], resultFormats: Seq[Int])
 
-  /** A portal mid-execution: the row iterator survives across Execute
-    * messages until exhausted (PortalSuspended in between). */
+  /** A portal mid-execution: the row iterator and its encoder survive
+    * across Execute messages until exhausted (PortalSuspended in
+    * between). */
   private final class OpenPortal(
-      val schema: org.apache.spark.sql.types.StructType,
-      val it: java.util.Iterator[org.apache.spark.sql.Row],
-      val formats: Seq[Int],
-      val geom: Seq[Boolean]) {
+      val it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      val enc: PgWire.ResultEncoder) {
     var emitted: Long = 0L
   }
 
@@ -666,10 +664,6 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         if (geom.lift(i).contains(true)) GeometryOid else PgWire.pgOid(f.dataType))
     }
 
-  /** PostGIS text output for geometry: uppercase hex EWKB, no \x. */
-  private def hexEwkb(b: Array[Byte]): String =
-    b.map("%02X".format(_)).mkString
-
   private def readCstr(buf: java.nio.ByteBuffer): String = {
     // accumulate BYTES and decode UTF-8 once: the old per-byte toChar
     // sign-extended every byte >= 0x80, mangling non-ASCII SQL in the
@@ -712,28 +706,19 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
     (portal, stmt, args, resultFormats)
   }
 
-  private def encodeRow(row: org.apache.spark.sql.Row,
-      schema: org.apache.spark.sql.types.StructType,
-      formats: Seq[Int],
-      zone: java.time.ZoneId,
-      geom: Seq[Boolean] = Nil): Seq[Option[Array[Byte]]] =
-    (0 until row.length).map { i =>
-      val fmt = if (formats.isEmpty) 0 else formats(i % formats.size)
-      // binary only for types with a real binary wire form — must stay
-      // consistent with the format codes describe() advertises
-      // (geometry's binary form IS its EWKB bytes, so bytea's raw path
-      // already serves it)
-      if (fmt == 1 && PgWire.binaryCapable(schema(i).dataType))
-        PgWire.encodeBinary(row.get(i), schema(i).dataType, zone)
-      else if (geom.lift(i).contains(true))
-        Option(row.get(i)).map(v =>
-          hexEwkb(v.asInstanceOf[Array[Byte]]).getBytes(UTF_8))
-      else PgWire.encodeValue(row.get(i), zone).map(_.getBytes(UTF_8))
-    }
+  /** The one result loop: send up to `limit` rows of `rows`, each
+    * framed by `enc`; returns how many were sent. */
+  private def send(out: PgWire.Out,
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      enc: PgWire.ResultEncoder, limit: Long = Long.MaxValue): Long = {
+    var n = 0L
+    while (n < limit && rows.hasNext) { out.row(enc, rows.next()); n += 1 }
+    n
+  }
 
   /** Execute with PG row-limit semantics: emit up to `maxRows` (0 = all)
     * from the portal's iterator; PortalSuspended if rows remain, else
-    * CommandComplete. The iterator is a streaming toLocalIterator — no
+    * CommandComplete. The rows stream partition by partition — no
     * driver materialization of the full result. */
   private def executePortal(sess: SparkSession, out: PgWire.Out, in: DataInputStream,
       name: String, maxRows: Int,
@@ -760,8 +745,8 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
               out.commandComplete(commandTag(sql, writtenRows(df)))
               None
             } else {
-              val o = new OpenPortal(df.schema, df.toLocalIterator(), fmts,
-                geometryFlags(df))
+              val o = new OpenPortal(PgWire.resultRows(df),
+                PgWire.ResultEncoder(sess, df.schema, fmts, geometryFlags(df)))
               openPortals(name) = o
               Some(o)
             }
@@ -773,14 +758,8 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         }
       }
       op.foreach { o =>
-        val limit = if (maxRows <= 0) Long.MaxValue else maxRows.toLong
-        val zone = PgWire.sessionZone(sess)
-        var n = 0L
-        while (o.it.hasNext && n < limit) {
-          out.dataRowRaw(encodeRow(o.it.next(), o.schema, o.formats, zone, o.geom))
-          n += 1
-        }
-        o.emitted += n
+        o.emitted += send(out, o.it, o.enc,
+          if (maxRows <= 0) Long.MaxValue else maxRows.toLong)
         if (o.it.hasNext) out.portalSuspended()
         else {
           openPortals.remove(name)
@@ -974,8 +953,8 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
     fields.toSeq.map(f => if (f.isEmpty) None else Some(f))
   }
 
-  /** COPY OUT: stream the result as PG text-format (or CSV) CopyData
-    * messages — the bulk-export path (no 1024-row cap). */
+  /** COPY OUT: stream the result as CopyData messages in PG text, CSV
+    * or binary format — the bulk-export path (no 1024-row cap). */
   /** @return true when the COPY errored (buffer-abort contract). */
   private def copyOut(sess: SparkSession, out: PgWire.Out, source: String, opts: String): Boolean =
     try {
@@ -987,7 +966,7 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
       val header = csv && opts.toLowerCase.contains("header")
       val df = sess.sql(sql)
       val schema = df.schema
-      if (binary) { // PGCOPY binary file format, every field binary-encoded
+      if (binary) {
         // every field is declared format-1, so a column without a real
         // binary wire form (struct/map/nested array) would be emitted as
         // UTF-8 text that a conforming client misparses — refuse instead
@@ -998,49 +977,20 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
               .map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", "))
           return true
         }
-        out.copyOutResponse(schema.size, binary = true)
-        out.copyData(PgWire.CopyBinaryHeader)
-        var n = 0L
-        val zone = PgWire.sessionZone(sess)
-        val it = df.toLocalIterator()
-        while (it.hasNext) {
-          val row = it.next()
-          out.copyData(PgWire.copyBinaryRow((0 until row.length).map(i =>
-            PgWire.encodeBinary(row.get(i), schema(i).dataType, zone))))
-          n += 1
-        }
-        out.copyData(PgWire.CopyBinaryTrailer)
-        out.copyDone()
-        out.commandComplete(s"COPY $n")
-        return false
       }
-      out.copyOutResponse(schema.size)
-      var n = 0L
+      out.copyOutResponse(schema.size, binary)
+      if (binary) out.copyData(PgWire.CopyBinaryHeader)
       if (header)
         out.copyData((schema.fieldNames.map(csvField).mkString(",") + "\n").getBytes(UTF_8))
-      val zone = PgWire.sessionZone(sess)
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        val fields = (0 until row.length).map(i => PgWire.encodeValue(row.get(i), zone))
-        val line =
-          if (csv) fields.map {
-            case None    => ""
-            case Some(s) => csvField(s)
-          }.mkString(",")
-          else fields.map {
-            case None    => "\\N"
-            case Some(s) => s.flatMap {
-              case '\\' => "\\\\"
-              case '\n' => "\\n"
-              case '\r' => "\\r"
-              case '\t' => "\\t"
-              case c    => c.toString
-            }
-          }.mkString("\t")
-        out.copyData((line + "\n").getBytes(UTF_8))
-        n += 1
-      }
+      // a binary COPY row has a DataRow's body: every field in its
+      // binary form (PGCOPY file format)
+      val enc = PgWire.ResultEncoder(sess, schema, Seq(if (binary) 1 else 0),
+        framing =
+          if (binary) PgWire.Framing.CopyBinary
+          else if (csv) PgWire.Framing.CopyCsv
+          else PgWire.Framing.CopyText)
+      val n = send(out, PgWire.resultRows(df), enc)
+      if (binary) out.copyData(PgWire.CopyBinaryTrailer)
       out.copyDone()
       out.commandComplete(s"COPY $n")
       false
@@ -1066,13 +1016,10 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
       val schema = df.schema
       if (schema.isEmpty) out.noData()
       else {
-        // degrade requested-binary columns without a binary form to text
-        // so the advertised format matches what encodeRow emits
-        val effective = schema.fields.indices.map { i =>
-          val req = if (resultFormats.isEmpty) 0
-            else resultFormats(i % resultFormats.size)
-          if (req == 1 && PgWire.binaryCapable(schema(i).dataType)) 1 else 0
-        }
+        // requested-binary columns without a binary form degrade to
+        // text, as the ResultEncoder writes them
+        val effective = schema.fields.indices.map(i =>
+          PgWire.resultFormat(resultFormats, i, schema(i).dataType))
         out.rowDescription(columnOids(schema, geometryFlags(df)), effective)
       }
     } catch { case NonFatal(_) => out.noData() }
@@ -1091,15 +1038,9 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         val geom = geometryFlags(df)
         if (withDescription)
           out.rowDescription(columnOids(schema, geom))
-        var n = 0
-        val zone = PgWire.sessionZone(sess)
-        val it = df.limit(RowLimit).toLocalIterator()
-        while (it.hasNext) {
-          val row = it.next()
-          out.dataRowRaw(encodeRow(row, schema, Nil, zone, geom))
-          n += 1
-        }
-        out.commandComplete(commandTag(sql, n))
+        val n = send(out, PgWire.resultRows(df.limit(RowLimit)),
+          PgWire.ResultEncoder(sess, schema, Nil, geom))
+        out.commandComplete(commandTag(sql, n.toInt))
       }
       false
     } catch {

@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** PostgreSQL wire-protocol framing + value encoding (reference A41/
@@ -12,18 +12,88 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object PgWire {
 
+  /** Per-direction socket buffer of a connection: the server writes its
+    * results, and the native client reads them, in chunks of this size. */
+  val IoBufferBytes: Int = 64 * 1024
+
+  /** A growable byte array reused for every message one connection
+    * frames or parses. The write methods are named after
+    * DataOutputStream's (big-endian), so message bodies read the same. */
+  final class WireBuffer(initial: Int = 256) {
+    private[graft] var array = new Array[Byte](initial)
+    private[graft] var size = 0
+    def reset(): Unit = size = 0
+    private[PgWire] def ensure(extra: Int): Unit =
+      if (size + extra > array.length)
+        array = java.util.Arrays.copyOf(array,
+          math.min(Int.MaxValue - 8L,
+            math.max(array.length * 2L, size.toLong + extra)).toInt)
+    def writeByte(v: Int): Unit = { ensure(1); array(size) = v.toByte; size += 1 }
+    def writeShort(v: Int): Unit = {
+      ensure(2)
+      array(size) = (v >>> 8).toByte; array(size + 1) = v.toByte
+      size += 2
+    }
+    def writeInt(v: Int): Unit = { ensure(4); setInt(size, v); size += 4 }
+    def writeLong(v: Long): Unit = {
+      writeInt((v >>> 32).toInt); writeInt(v.toInt)
+    }
+    def write(b: Array[Byte]): Unit = write(b, 0, b.length)
+    def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      ensure(len); System.arraycopy(b, off, array, size, len); size += len
+    }
+    /** Append a UTF8String's bytes as they are. */
+    def write(s: org.apache.spark.unsafe.types.UTF8String): Unit = {
+      ensure(s.numBytes)
+      s.writeToMemory(array, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + size)
+      size += s.numBytes
+    }
+    /** Append an ASCII string, one byte per char. */
+    def writeAscii(s: String): Unit = {
+      ensure(s.length)
+      var i = 0
+      while (i < s.length) { array(size + i) = s.charAt(i).toByte; i += 1 }
+      size += s.length
+    }
+    /** Overwrite the int32 at `pos` (a length written before its body). */
+    def setInt(pos: Int, v: Int): Unit = {
+      array(pos) = (v >>> 24).toByte; array(pos + 1) = (v >>> 16).toByte
+      array(pos + 2) = (v >>> 8).toByte; array(pos + 3) = v.toByte
+    }
+    def getInt(pos: Int): Int =
+      (array(pos) << 24) | ((array(pos + 1) & 0xff) << 16) |
+        ((array(pos + 2) & 0xff) << 8) | (array(pos + 3) & 0xff)
+    def getShort(pos: Int): Short = ((array(pos) << 8) | (array(pos + 1) & 0xff)).toShort
+    /** Replace the contents with the next `n` bytes of `in`. */
+    def fill(in: DataInputStream, n: Int): Unit = {
+      size = 0; ensure(n); in.readFully(array, 0, n); size = n
+    }
+    /** Drop a buffer one oversized message grew, so a connection does
+      * not keep it for its lifetime. */
+    def shrink(): Unit = if (array.length > (1 << 20)) array = new Array[Byte](8192)
+  }
+
   // ---- message writing ----
 
-  final class Out(out: DataOutputStream) {
-    def msg(tag: Char)(body: DataOutputStream => Unit): Unit = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val d = new DataOutputStream(buf)
-      body(d)
-      out.writeByte(tag)
-      out.writeInt(4 + buf.size)
-      buf.writeTo(out)
+  /** Frames every message of a connection in one reusable buffer and
+    * hands it to the stream in a single write. */
+  final class Out(out: OutputStream) {
+    private val frame = new WireBuffer(8192)
+    def msg(tag: Char)(body: WireBuffer => Unit): Unit = {
+      frame.reset()
+      frame.writeByte(tag)
+      frame.writeInt(0)
+      body(frame)
+      frame.setInt(1, frame.size - 1)
+      out.write(frame.array, 0, frame.size)
+      frame.shrink()
     }
     def flush(): Unit = out.flush()
+
+    /** One result row as the encoder frames it: a DataRow, or a COPY
+      * TO STDOUT CopyData line. */
+    def row(enc: ResultEncoder, r: org.apache.spark.sql.catalyst.InternalRow): Unit =
+      msg(enc.tag)(enc.write(r, _))
 
     def authenticationOk(): Unit = msg('R')(_.writeInt(0))
     /** AuthenticationSASL: advertised mechanisms, NUL-separated with a
@@ -62,16 +132,6 @@ object PgWire {
           d.writeShort(if (formats.isEmpty) 0 else formats(i % formats.size))
         }
       }
-    def dataRow(values: Seq[Option[String]]): Unit =
-      dataRowRaw(values.map(_.map(_.getBytes(UTF_8))))
-    def dataRowRaw(values: Seq[Option[Array[Byte]]]): Unit = msg('D') { d =>
-      d.writeShort(values.size)
-      values.foreach {
-        case None => d.writeInt(-1)
-        case Some(b) =>
-          d.writeInt(b.length); d.write(b)
-      }
-    }
     def portalSuspended(): Unit = msg('s')(_ => ())
     def copyOutResponse(nCols: Int, binary: Boolean = false): Unit = msg('H') { d =>
       d.writeByte(if (binary) 1 else 0)
@@ -99,7 +159,7 @@ object PgWire {
       d.writeByte('M'); cstr(d, message)
       d.writeByte(0)
     }
-    private def cstr(d: DataOutputStream, s: String): Unit = {
+    private def cstr(d: WireBuffer, s: String): Unit = {
       d.write(s.getBytes(UTF_8)); d.writeByte(0)
     }
   }
@@ -110,19 +170,6 @@ object PgWire {
   val CopyBinaryHeader: Array[Byte] =
     "PGCOPY\n".getBytes(UTF_8) ++ Array[Byte](-1, '\r', '\n', 0) ++
       Array.fill[Byte](8)(0) // flags int32 + header-extension length int32
-
-  /** One binary COPY row: int16 field count, then per field int32
-    * length (-1 = NULL) + the field's binary encoding. */
-  def copyBinaryRow(fields: Seq[Option[Array[Byte]]]): Array[Byte] = {
-    val body = new java.io.ByteArrayOutputStream()
-    val d = new DataOutputStream(body)
-    d.writeShort(fields.size)
-    fields.foreach {
-      case None    => d.writeInt(-1)
-      case Some(b) => d.writeInt(b.length); d.write(b)
-    }
-    body.toByteArray
-  }
 
   /** Binary COPY trailer: int16 -1. */
   val CopyBinaryTrailer: Array[Byte] = Array[Byte](-1, -1)
@@ -165,7 +212,7 @@ object PgWire {
   private val MaxMessageLen = 1 << 30
   private val MaxStartupLen = 1 << 20 // PG caps startup packets far smaller
 
-  private def checkLen(len: Int, max: Int, what: String): Unit =
+  private def checkLen(len: Int, max: Int, what: => String): Unit =
     if (len < 4 || len > max)
       throw new IllegalArgumentException(
         s"invalid message length $len in $what frame")
@@ -191,6 +238,16 @@ object PgWire {
     val body = new Array[Byte](len - 4)
     in.readFully(body)
     Message(tag, body)
+  }
+
+  /** Read the next message's body into `into`, which the caller reuses
+    * from message to message; returns the message's tag. */
+  def readFrame(in: DataInputStream, into: WireBuffer): Char = {
+    val tag = in.readByte().toChar
+    val len = in.readInt()
+    checkLen(len, MaxMessageLen, s"'$tag'")
+    into.fill(in, len - 4)
+    tag
   }
 
   def cstrings(body: Array[Byte]): Seq[String] =
@@ -249,8 +306,8 @@ object PgWire {
 
   // PG epochs: 2000-01-01 is day 10957 / microsecond 946684800000000
   // after the unix epoch.
-  private val PgEpochDay = 10957L
-  private val PgEpochMicros = 946684800000000L
+  private[graft] val PgEpochDay = 10957L
+  private[graft] val PgEpochMicros = 946684800000000L
 
   /** Types with a real PG binary wire form in [[encodeBinary]]; for
     * anything else a requested binary format silently degrades to text
@@ -475,7 +532,7 @@ object PgWire {
 
   /** Inverse of [[numericBinary]]: ndigits/weight/sign/dscale header +
     * base-10000 digit groups → BigDecimal. */
-  private def decodeNumericBinary(buf: java.nio.ByteBuffer): java.math.BigDecimal = {
+  private[graft] def decodeNumericBinary(buf: java.nio.ByteBuffer): java.math.BigDecimal = {
     val nd = buf.getShort.toInt
     val weight = buf.getShort.toInt
     val sign = buf.getShort & 0xFFFF
@@ -647,5 +704,383 @@ object PgWire {
       }
       Some(s.map(elem).mkString("{", ",", "}"))
     case other                   => Some(other.toString)
+  }
+
+  // ---- result encoding straight from Catalyst rows ----
+
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+  import org.apache.spark.unsafe.Platform
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** Format code of result column `i` for the requested `formats` (PG
+    * applies a shorter list cyclically; none = text). Binary only for a
+    * type with a binary wire form: the RowDescription must say text
+    * otherwise, or a binary-mode client misparses the bytes. */
+  def resultFormat(formats: Seq[Int], i: Int, dt: DataType): Int =
+    if (formats.nonEmpty && formats(i % formats.size) == 1 && binaryCapable(dt)) 1
+    else 0
+
+  /** `df`'s result as Catalyst rows, fetched partition by partition.
+    * It runs as one SQL execution, as Dataset's toLocalIterator does:
+    * query-execution listeners see it, and its jobs belong to the
+    * calling thread's job group (so a CancelRequest reaches them). */
+  def resultRows(df: org.apache.spark.sql.DataFrame): Iterator[InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
+      qe.executedPlan.resetMetrics()
+      qe.executedPlan.executeToIterator()
+    }
+  }
+
+  /** How a [[ResultEncoder]] frames a row: a DataRow, or the CopyData
+    * message of one COPY TO STDOUT row in binary, text or CSV format. */
+  sealed abstract class Framing(val tag: Char)
+  object Framing {
+    case object DataRow extends Framing('D')
+    case object CopyBinary extends Framing('d')
+    case object CopyText extends Framing('d')
+    case object CopyCsv extends Framing('d')
+  }
+
+  /** Writes the wire bytes of one non-null cell, without its length
+    * prefix, from a row or an array. */
+  private[server] abstract class CellWriter {
+    def write(g: SpecializedGetters, i: Int, b: WireBuffer): Unit
+  }
+
+  /** One statement's result encoder. It holds one cell writer per
+    * column, resolved once from the column's type, its format code, the
+    * session zone and the geometry flag, and writes each Catalyst row
+    * straight into the connection's frame buffer. The bytes are those
+    * [[encodeBinary]] / [[encodeValue]] give for the same row collected
+    * as an external Row: a type without a direct writer goes through
+    * the same converter the Row deserializer uses, then through them. */
+  final class ResultEncoder private (cells: Array[CellWriter], framing: Framing) {
+    private val cell = new WireBuffer()
+    def tag: Char = framing.tag
+
+    def write(row: InternalRow, b: WireBuffer): Unit = framing match {
+      case Framing.CopyText => line(row, b, csv = false)
+      case Framing.CopyCsv  => line(row, b, csv = true)
+      case _                => fields(row, b)
+    }
+
+    /** int16 field count, then per field an int32 length (-1 = NULL) and
+      * its bytes: the body of a DataRow and of a binary COPY row. */
+    private def fields(row: InternalRow, b: WireBuffer): Unit = {
+      b.writeShort(cells.length)
+      var i = 0
+      while (i < cells.length) { lengthPrefixed(cells(i), row, i, b); i += 1 }
+    }
+
+    /** One COPY text line (tab-separated, \N = NULL, backslash escapes)
+      * or CSV line (empty = NULL, quoted when needed). */
+    private def line(row: InternalRow, b: WireBuffer, csv: Boolean): Unit = {
+      var i = 0
+      while (i < cells.length) {
+        if (i > 0) b.writeByte(if (csv) ',' else '\t')
+        if (row.isNullAt(i)) { if (!csv) b.writeAscii("\\N") }
+        else {
+          cell.reset()
+          cells(i).write(row, i, cell)
+          if (csv) csvCell(cell, b) else textCell(cell, b)
+        }
+        i += 1
+      }
+      b.writeByte('\n')
+      cell.shrink()
+    }
+  }
+
+  object ResultEncoder {
+    /** `formats` are the requested format codes (see [[resultFormat]]);
+      * `geom` flags geometry columns, whose text form is PostGIS hex
+      * EWKB. */
+    def apply(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+        formats: Seq[Int], geom: Seq[Boolean] = Nil,
+        framing: Framing = Framing.DataRow): ResultEncoder = {
+      val zone = sessionZone(spark)
+      // converters read the java8API setting of the active session: make
+      // it this one, as the Row deserializer of its Datasets saw it
+      val SparkSession = org.apache.spark.sql.SparkSession
+      val prev = SparkSession.getActiveSession
+      SparkSession.setActiveSession(spark)
+      try new ResultEncoder(schema.fields.indices.map { i =>
+        val dt = schema(i).dataType
+        val binary = resultFormat(formats, i, dt) == 1
+        if (!binary && geom.lift(i).contains(true)) HexEwkb
+        else cellWriter(dt, binary, zone)
+      }.toArray, framing)
+      finally prev match {
+        case Some(p) => SparkSession.setActiveSession(p)
+        case None    => SparkSession.clearActiveSession()
+      }
+    }
+  }
+
+  /** int32 length (-1 = NULL), then the cell's bytes. */
+  private def lengthPrefixed(w: CellWriter, g: SpecializedGetters, i: Int,
+      b: WireBuffer): Unit =
+    if (g.isNullAt(i)) b.writeInt(-1)
+    else {
+      val at = b.size
+      b.writeInt(0)
+      w.write(g, i, b)
+      b.setInt(at, b.size - at - 4)
+    }
+
+  /** COPY text escaping of one cell: backslash, newline, carriage
+    * return and tab. They are ASCII, so no multibyte character holds
+    * their bytes. */
+  private def textCell(c: WireBuffer, b: WireBuffer): Unit = {
+    var i = 0
+    while (i < c.size) {
+      val x = c.array(i)
+      if (x == '\\') { b.writeByte('\\'); b.writeByte('\\') }
+      else if (x == '\n') { b.writeByte('\\'); b.writeByte('n') }
+      else if (x == '\r') { b.writeByte('\\'); b.writeByte('r') }
+      else if (x == '\t') { b.writeByte('\\'); b.writeByte('t') }
+      else b.writeByte(x)
+      i += 1
+    }
+  }
+
+  /** CSV cell: quoted, with doubled quotes, when it holds a comma, quote,
+    * newline or carriage return. */
+  private def csvCell(c: WireBuffer, b: WireBuffer): Unit = {
+    var quote = false
+    var i = 0
+    while (i < c.size && !quote) {
+      val x = c.array(i)
+      quote = x == ',' || x == '"' || x == '\n' || x == '\r'
+      i += 1
+    }
+    if (!quote) b.write(c.array, 0, c.size)
+    else {
+      b.writeByte('"')
+      i = 0
+      while (i < c.size) {
+        if (c.array(i) == '"') b.writeByte('"')
+        b.writeByte(c.array(i))
+        i += 1
+      }
+      b.writeByte('"')
+    }
+  }
+
+  // the first instant Spark's Timestamp/Date conversions do not rebase
+  // between the hybrid Julian and the proleptic Gregorian calendar in
+  // any zone; earlier values take the converter
+  private val Epoch1900Micros = Epoch1900Millis * 1000L
+  private val Epoch10000Micros = 253402300800000000L // 10000-01-01T00:00:00Z
+  private val Epoch1900Day = -25567    // 1900-01-01
+  private val Year9999LastDay = 2932896 // 9999-12-31
+
+  private val LowerHex = "0123456789abcdef".getBytes(UTF_8)
+  private val UpperHex = "0123456789ABCDEF".getBytes(UTF_8)
+
+  private def writeHex(bytes: Array[Byte], digits: Array[Byte], b: WireBuffer): Unit = {
+    var i = 0
+    while (i < bytes.length) {
+      b.writeByte(digits((bytes(i) >> 4) & 0xf)); b.writeByte(digits(bytes(i) & 0xf))
+      i += 1
+    }
+  }
+
+  /** PostGIS text output for geometry: uppercase hex EWKB, no \x. */
+  private val HexEwkb: CellWriter = (g, i, b) => writeHex(g.getBinary(i), UpperHex, b)
+
+  private def cellWriter(dt: DataType, binary: Boolean,
+      zone: java.time.ZoneId): CellWriter = {
+    // built now, while the statement's session is active
+    val converted = new Converted(dt, binary, zone)
+    val wall = new WallClock(zone)
+    if (binary) dt match {
+      case BooleanType => (g, i, b) => b.writeByte(if (g.getBoolean(i)) 1 else 0)
+      case ByteType    => (g, i, b) => b.writeByte(g.getByte(i))
+      case ShortType   => (g, i, b) => b.writeShort(g.getShort(i))
+      case IntegerType => (g, i, b) => b.writeInt(g.getInt(i))
+      case LongType    => (g, i, b) => b.writeLong(g.getLong(i))
+      case FloatType   => (g, i, b) => b.writeInt(java.lang.Float.floatToRawIntBits(g.getFloat(i)))
+      case DoubleType  => (g, i, b) => b.writeLong(java.lang.Double.doubleToRawLongBits(g.getDouble(i)))
+      case StringType  => (g, i, b) => writeUtf8(g.getUTF8String(i), b)
+      case BinaryType  => (g, i, b) => b.write(g.getBinary(i))
+      case DateType => (g, i, b) => {
+        val d = g.getInt(i)
+        if (d >= Epoch1900Day && d <= Year9999LastDay) b.writeInt((d - PgEpochDay).toInt)
+        else converted.write(g, i, b)
+      }
+      case _: TimestampType => (g, i, b) => {
+        val us = g.getLong(i)
+        if (us >= Epoch1900Micros) b.writeLong(wall(us) - PgEpochMicros)
+        else converted.write(g, i, b)
+      }
+      case _: TimestampNTZType => (g, i, b) => b.writeLong(g.getLong(i) - PgEpochMicros)
+      case d: DecimalType => (g, i, b) =>
+        b.write(numericBinary(g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal))
+      case ArrayType(et, _) => new ArrayWriter(et, cellWriter(et, binary = true, zone))
+      case _ => converted
+    } else dt match {
+      case BooleanType => (g, i, b) => b.writeByte(if (g.getBoolean(i)) 't' else 'f')
+      case ByteType    => (g, i, b) => writeDecimal(g.getByte(i), b)
+      case ShortType   => (g, i, b) => writeDecimal(g.getShort(i), b)
+      case IntegerType => (g, i, b) => writeDecimal(g.getInt(i), b)
+      case LongType    => (g, i, b) => writeDecimal(g.getLong(i), b)
+      case FloatType   => (g, i, b) =>
+        b.writeAscii(pgFloatText(java.lang.Float.toString(g.getFloat(i))))
+      case DoubleType  => (g, i, b) =>
+        b.writeAscii(pgFloatText(java.lang.Double.toString(g.getDouble(i))))
+      case StringType  => (g, i, b) => writeUtf8(g.getUTF8String(i), b)
+      case BinaryType  => (g, i, b) => { b.writeAscii("\\x"); writeHex(g.getBinary(i), LowerHex, b) }
+      case DateType => (g, i, b) => {
+        val d = g.getInt(i)
+        if (d >= Epoch1900Day && d <= Year9999LastDay)
+          writeDate(java.time.LocalDate.ofEpochDay(d), b)
+        else converted.write(g, i, b)
+      }
+      case _: TimestampType => (g, i, b) => {
+        val us = g.getLong(i)
+        // bounded above too, so the wall cannot overflow a long
+        if (us >= Epoch1900Micros && us < Epoch10000Micros) writeWall(wall(us), b)
+        else converted.write(g, i, b)
+      }
+      case _: TimestampNTZType => (g, i, b) => writeWall(g.getLong(i), b)
+      case d: DecimalType => (g, i, b) =>
+        b.writeAscii(g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString)
+      case _ => converted
+    }
+  }
+
+  /** The cell through the external value the Row deserializer would
+    * build, then [[encodeBinary]] / [[encodeValue]]. */
+  private final class Converted(dt: DataType, binary: Boolean,
+      zone: java.time.ZoneId) extends CellWriter {
+    private val toScala =
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt)
+    def write(g: SpecializedGetters, i: Int, b: WireBuffer): Unit = {
+      val v = toScala(g.get(i, dt))
+      b.write((if (binary) encodeBinary(v, dt, zone)
+        else encodeValue(v, zone).map(_.getBytes(UTF_8))).get)
+    }
+  }
+
+  /** 1-D array binary form, each element by the element type's writer
+    * (same layout as [[encodeBinary]]'s Seq case). */
+  private final class ArrayWriter(et: DataType, elem: CellWriter) extends CellWriter {
+    private val elemOid = pgOid(et)
+    def write(g: SpecializedGetters, i: Int, b: WireBuffer): Unit = {
+      val a = g.getArray(i)
+      val n = a.numElements
+      if (n == 0) { b.writeInt(0); b.writeInt(0); b.writeInt(elemOid) }
+      else {
+        var hasNull = 0
+        var k = 0
+        while (k < n) { if (a.isNullAt(k)) hasNull = 1; k += 1 }
+        b.writeInt(1); b.writeInt(hasNull); b.writeInt(elemOid)
+        b.writeInt(n); b.writeInt(1)
+        k = 0
+        while (k < n) { lengthPrefixed(elem, a, k, b); k += 1 }
+      }
+    }
+  }
+
+  /** Session-zone wall-clock micros of an instant (micros since the
+    * epoch): what LocalDateTime.ofInstant gives, without building one. */
+  private final class WallClock(zone: java.time.ZoneId) {
+    private val rules = zone.getRules
+    private val fixed = rules.isFixedOffset
+    private val fixedMicros =
+      if (fixed) rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds * 1000000L
+      else 0L
+    def apply(us: Long): Long =
+      if (fixed) us + fixedMicros
+      else us + rules.getOffset(java.time.Instant.ofEpochSecond(
+        Math.floorDiv(us, 1000000L))).getTotalSeconds * 1000000L
+  }
+
+  private def writeDecimal(v: Long, b: WireBuffer): Unit =
+    if (v == Long.MinValue) b.writeAscii("-9223372036854775808")
+    else {
+      if (v < 0) b.writeByte('-')
+      val n = math.abs(v)
+      var width = 1
+      var t = n
+      while (t >= 10) { t /= 10; width += 1 }
+      writeDigits(n, width, b)
+    }
+
+  /** `n` (>= 0) as exactly `width` decimal digits, zero-padded. */
+  private def writeDigits(n0: Long, width: Int, b: WireBuffer): Unit = {
+    b.ensure(width)
+    var n = n0
+    var k = b.size + width - 1
+    while (k >= b.size) { b.array(k) = ('0' + n % 10).toByte; n /= 10; k -= 1 }
+    b.size += width
+  }
+
+  /** yyyy-MM-dd for years 1-9999. */
+  private def writeDate(d: java.time.LocalDate, b: WireBuffer): Unit = {
+    writeDigits(d.getYear, 4, b); b.writeByte('-')
+    writeDigits(d.getMonthValue, 2, b); b.writeByte('-')
+    writeDigits(d.getDayOfMonth, 2, b)
+  }
+
+  /** Wall-clock micros as `tsFmt` prints them. */
+  private def writeWall(wall: Long, b: WireBuffer): Unit = {
+    val sec = Math.floorDiv(wall, 1000000L)
+    val us = Math.floorMod(wall, 1000000L)
+    val date = java.time.LocalDate.ofEpochDay(Math.floorDiv(sec, 86400L))
+    if (date.getYear < 1 || date.getYear > 9999)
+      b.writeAscii(java.time.LocalDateTime.ofEpochSecond(sec, us.toInt * 1000,
+        java.time.ZoneOffset.UTC).format(tsFmt))
+    else {
+      val sod = Math.floorMod(sec, 86400L)
+      writeDate(date, b); b.writeByte(' ')
+      writeDigits(sod / 3600, 2, b); b.writeByte(':')
+      writeDigits(sod / 60 % 60, 2, b); b.writeByte(':')
+      writeDigits(sod % 60, 2, b); b.writeByte('.')
+      writeDigits(us, 6, b)
+    }
+  }
+
+  /** A string's bytes as `toString.getBytes(UTF_8)` gives them: as they
+    * are when well-formed, else with the decoder's replacements. */
+  private def writeUtf8(s: UTF8String, b: WireBuffer): Unit =
+    if (wellFormedUtf8(s.getBaseObject, s.getBaseOffset, s.numBytes)) b.write(s)
+    else b.write(s.toString.getBytes(UTF_8))
+
+  /** True when the bytes are well-formed UTF-8 as Java's decoder reads
+    * it (no overlong form, surrogate or code point past U+10FFFF), that
+    * is exactly when decoding and re-encoding returns the same bytes. */
+  private[graft] def wellFormedUtf8(base: AnyRef, offset: Long, len: Int): Boolean = {
+    var i = 0
+    // ASCII runs eight bytes at a time where unaligned reads are allowed
+    if (Platform.unaligned())
+      while (i + 8 <= len &&
+          (Platform.getLong(base, offset + i) & 0x8080808080808080L) == 0) i += 8
+    while (i < len) {
+      val b0 = Platform.getByte(base, offset + i) & 0xff
+      if (b0 < 0x80) i += 1
+      else {
+        val more =
+          if (b0 >= 0xc2 && b0 <= 0xdf) 1
+          else if (b0 >= 0xe0 && b0 <= 0xef) 2
+          else if (b0 >= 0xf0 && b0 <= 0xf4) 3
+          else return false
+        if (len - i <= more) return false
+        val b1 = Platform.getByte(base, offset + i + 1) & 0xff
+        val lo = if (b0 == 0xe0) 0xa0 else if (b0 == 0xf0) 0x90 else 0x80
+        val hi = if (b0 == 0xed) 0x9f else if (b0 == 0xf4) 0x8f else 0xbf
+        if (b1 < lo || b1 > hi) return false
+        var k = 2
+        while (k <= more) {
+          if ((Platform.getByte(base, offset + i + k) & 0xc0) != 0x80) return false
+          k += 1
+        }
+        i += more + 1
+      }
+    }
+    true
   }
 }

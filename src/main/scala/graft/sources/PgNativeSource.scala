@@ -5,7 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
@@ -30,6 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * (first partition takes the below-range + NULLs, last takes the
   * above-range) re-implemented on the native transport. Rows stream
   * one protocol message at a time; nothing buffers a whole partition.
+  * Each column gets one [[PgNativeSource.CellDecoder]], resolved when
+  * the RowDescription arrives, that reads its cell straight from the
+  * DataRow body into the Catalyst value.
   */
 final class PgNativeSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pgwire"
@@ -207,6 +210,74 @@ object PgNativeSource {
           s"(${other.getClass.getSimpleName}) to $dt")
     }
   }
+
+  /** Reads one non-null wire cell, `b[off, off + len)`, into column
+    * `i` of a Catalyst row. The value is the one [[convertBinary]]
+    * (binary cells) or [[convert]] (text cells) gives. */
+  private[graft] abstract class CellDecoder {
+    def decode(b: Array[Byte], off: Int, len: Int, row: InternalRow, i: Int): Unit
+  }
+
+  /** The decoder of a column of Spark type `dt` that arrives with type
+    * `oid` in `format` (0 text, 1 binary): a direct read for the common
+    * pairs, and otherwise [[convertBinary]] / [[convert]], chosen here
+    * once for the column. */
+  private[graft] def cellDecoder(oid: Int, format: Int, dt: DataType,
+      zone: java.time.ZoneId): CellDecoder = {
+    import graft.server.PgWire.{PgEpochDay, PgEpochMicros}
+    def int(b: Array[Byte], o: Int): Int =
+      (b(o) << 24) | ((b(o + 1) & 0xff) << 16) | ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
+    def long(b: Array[Byte], o: Int): Long =
+      (int(b, o).toLong << 32) | (int(b, o + 4) & 0xffffffffL)
+    val utcOffsetMicros: Option[Long] = {
+      val rules = zone.getRules
+      if (rules.isFixedOffset)
+        Some(rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds * 1000000L)
+      else None
+    }
+    val text: CellDecoder = (b, off, len, row, i) =>
+      row.update(i, convert(new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8), dt, zone))
+    if (format != 1) dt match {
+      case StringType => Utf8Cell
+      case _          => text
+    } else (oid, dt) match {
+      case (16, BooleanType) => (b, off, _, row, i) => row.setBoolean(i, b(off) != 0)
+      case (18, ByteType)    => (b, off, _, row, i) => row.setByte(i, b(off))
+      case (21, ShortType)   => (b, off, _, row, i) =>
+        row.setShort(i, ((b(off) << 8) | (b(off + 1) & 0xff)).toShort)
+      case (23, IntegerType) => (b, off, _, row, i) => row.setInt(i, int(b, off))
+      case (20, LongType)    => (b, off, _, row, i) => row.setLong(i, long(b, off))
+      case (700, FloatType)  => (b, off, _, row, i) =>
+        row.setFloat(i, java.lang.Float.intBitsToFloat(int(b, off)))
+      case (701, DoubleType) => (b, off, _, row, i) =>
+        row.setDouble(i, java.lang.Double.longBitsToDouble(long(b, off)))
+      case (17, BinaryType)  => (b, off, len, row, i) =>
+        row.update(i, java.util.Arrays.copyOfRange(b, off, off + len))
+      case (25 | 1043 | 1042 | 19, StringType) => Utf8Cell
+      case (1082, DateType)  => (b, off, _, row, i) => row.setInt(i, (PgEpochDay + int(b, off)).toInt)
+      case (1114, TimestampNTZType) | (1184, TimestampNTZType) | (1184, TimestampType) =>
+        (b, off, _, row, i) => row.setLong(i, PgEpochMicros + long(b, off))
+      // a zone-less wall through a fixed-offset reading zone
+      case (1114, TimestampType) if utcOffsetMicros.isDefined =>
+        val shift = utcOffsetMicros.get
+        (b, off, _, row, i) => row.setLong(i, PgEpochMicros + long(b, off) - shift)
+      case (1700, d: DecimalType) => (b, off, len, row, i) =>
+        row.update(i, org.apache.spark.sql.types.Decimal(graft.server.PgWire
+          .decodeNumericBinary(java.nio.ByteBuffer.wrap(b, off, len)), d.precision, d.scale))
+      case _ => (b, off, len, row, i) =>
+        row.update(i, convertBinary(oid, java.util.Arrays.copyOfRange(b, off, off + len), dt, zone))
+    }
+  }
+
+  /** A string cell as its own bytes when they are well-formed UTF-8
+    * (what decoding and re-encoding returns), else through a String. */
+  private val Utf8Cell: CellDecoder = (b, off, len, row, i) =>
+    row.update(i,
+      if (graft.server.PgWire.wellFormedUtf8(b,
+          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + off, len))
+        UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, off, off + len))
+      else UTF8String.fromString(
+        new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8)))
 
   /** trailing zone offset of PG timestamptz text: +HH, +HH:MM, +HH:MM:SS */
   private val TzSuffix = "([+-]\\d{2}(?::?\\d{2}){0,2})$".r
@@ -486,35 +557,38 @@ private final class PgNativePartitionReader(required: StructType,
   catch {
     case t: Throwable => try cli.close() catch { case _: Throwable => }; throw t
   }
-  private var row: Array[Option[Array[Byte]]] = _
+  // one reused row; its cells decode straight from the DataRow body
+  private val row = new SpecificInternalRow(required.fields.map(_.dataType).toSeq)
+  private var decoders: Array[PgNativeSource.CellDecoder] = _
 
   override def next(): Boolean = {
-    row = cli.fetchRowRaw()
-    row != null
-  }
-
-  override def get(): InternalRow = {
-    if (required.isEmpty) return new GenericInternalRow(0)
-    val formats = cli.fieldFormats
-    val oids = cli.fields
-    val out = new Array[Any](required.length)
+    if (!cli.nextRow()) return false
+    if (decoders == null) {
+      // resolved once, from the RowDescription that precedes the rows
+      // (its format codes are authoritative over the requested ones)
+      val formats = cli.fieldFormats
+      val oids = cli.fields
+      decoders = Array.tabulate(required.length) { i =>
+        val format = if (i < formats.length) formats(i) else 0
+        PgNativeSource.cellDecoder(if (format == 1) oids(i)._2 else 0, format,
+          required(i).dataType, wallZone)
+      }
+    }
+    if (cli.cellCount < required.length)
+      throw new java.io.IOException(s"postgres_scan native client: DataRow has " +
+        s"${cli.cellCount} cells, the scan reads ${required.length} columns")
+    val b = cli.cellBytes
     var i = 0
     while (i < required.length) {
-      out(i) = row(i) match {
-        case Some(cell) =>
-          if (i < formats.length && formats(i) == 1)
-            PgNativeSource.convertBinary(oids(i)._2, cell, required(i).dataType,
-              wallZone)
-          else
-            PgNativeSource.convert(
-              new String(cell, java.nio.charset.StandardCharsets.UTF_8),
-              required(i).dataType, wallZone)
-        case None => null
-      }
+      val len = cli.cellLength(i)
+      if (len < 0) row.setNullAt(i)
+      else decoders(i).decode(b, cli.cellOffset(i), len, row, i)
       i += 1
     }
-    new GenericInternalRow(out)
+    true
   }
+
+  override def get(): InternalRow = row
 
   override def close(): Unit = cli.close()
 }

@@ -20,7 +20,10 @@ import graft.server.PgWire
   * speaks it), one simple Query per call, text-format results streamed
   * row-at-a-time (the reader pulls DataRows from the socket as the
   * Spark task consumes them — no whole-result buffering, which is what
-  * makes a 100 TB-side federated scan possible at all). TLS upgrades
+  * makes a 100 TB-side federated scan possible at all). Each message is
+  * read into one reused buffer and a DataRow's cells are located in
+  * place ([[nextRow]]), so a reader decodes them without a copy per
+  * cell. TLS upgrades
   * in place via SSLRequest with libpq's full sslmode ladder:
   * disable/prefer/require (require = encrypted, no CA verification)
   * and verify-ca/verify-full backed by a PEM CA bundle (`sslRootCert`,
@@ -75,7 +78,9 @@ final class PgWireClient(host: String, port: Int, database: String,
         try sock.close() catch { case _: Throwable => }
         throw t
     }
-  private val in = new DataInputStream(new BufferedInputStream(chan.getInputStream))
+  // read in the chunks the server writes
+  private val in = new DataInputStream(
+    new BufferedInputStream(chan.getInputStream, PgWire.IoBufferBytes))
   private val out = new DataOutputStream(new BufferedOutputStream(chan.getOutputStream))
 
   private def negotiateTls(): Socket = effectiveSslMode match {
@@ -441,69 +446,108 @@ final class PgWireClient(host: String, port: Int, database: String,
 
   /** Next DataRow as raw per-column cell bytes (text or binary per
     * [[fieldFormats]]; None = SQL NULL), or null when the result set
-    * is exhausted. Reads the socket incrementally — one message per
-    * call on the row-bearing path. Throws the server's error (after
-    * the protocol reaches ReadyForQuery, so the connection stays
-    * usable). */
-  def fetchRowRaw(): Array[Option[Array[Byte]]] = {
-    if (done) return null
+    * is exhausted. A copy of what [[nextRow]] locates. */
+  def fetchRowRaw(): Array[Option[Array[Byte]]] =
+    if (!nextRow()) null
+    else Array.tabulate(cellCount) { i =>
+      if (cellLength(i) < 0) None
+      else Some(java.util.Arrays.copyOfRange(cellBytes,
+        cellOffset(i), cellOffset(i) + cellLength(i)))
+    }
+
+  /** The message being read, reused from message to message. */
+  private val body = new PgWire.WireBuffer(8192)
+  private var cellOffsets = new Array[Int](16)
+  private var cellLengths = new Array[Int](16)
+  private var cells = 0
+
+  /** Advance to the next DataRow of the in-flight query; false when the
+    * result set is exhausted. Reads the socket incrementally — one
+    * message per call on the row-bearing path. Throws the server's
+    * error (after the protocol reaches ReadyForQuery, so the connection
+    * stays usable). Until the next call, the row's cells are
+    * `cellBytes[cellOffset(i), cellOffset(i) + cellLength(i))`, with
+    * length -1 for SQL NULL. */
+  private[graft] def nextRow(): Boolean = {
+    if (done) return false
     while (true) {
-      val m = PgWire.readMessage(in)
-      m.tag match {
+      body.shrink()
+      PgWire.readFrame(in, body) match {
         case 'D' =>
-          val bb = java.nio.ByteBuffer.wrap(m.body)
-          val n = bb.getShort.toInt
-          val row = new Array[Option[Array[Byte]]](n)
-          var i = 0
-          while (i < n) {
-            val len = bb.getInt
-            if (len < 0) row(i) = None
-            else {
-              val bytes = new Array[Byte](len)
-              bb.get(bytes)
-              row(i) = Some(bytes)
-            }
-            i += 1
-          }
-          return row
-        case 'T' =>
-          val bb = java.nio.ByteBuffer.wrap(m.body)
-          val n = bb.getShort.toInt
-          val fs = new Array[Int](n)
-          fieldsVar = (0 until n).map { i =>
-            val nameBytes = new java.io.ByteArrayOutputStream()
-            var b = bb.get()
-            while (b != 0) { nameBytes.write(b); b = bb.get() }
-            bb.getInt; bb.getShort // table oid, attnum
-            val oid = bb.getInt
-            bb.getShort; bb.getInt // typlen, typmod
-            fs(i) = bb.getShort.toInt // format code (authoritative)
-            (new String(nameBytes.toByteArray, UTF_8), oid)
-          }.toArray
-          fieldFormatsVar = fs
+          locateCells()
+          return true
+        case 'T' => rowDescription()
         case 'C' => // CommandComplete: keep the tag (tests / diagnostics)
           lastCommandTagVar =
-            new String(m.body, 0, math.max(0, m.body.length - 1), UTF_8)
+            new String(body.array, 0, math.max(0, body.size - 1), UTF_8)
         // '1'/'2' = Parse/BindComplete (extended); 'I'/'N'/'S' as in
         // the simple protocol
         case '1' | '2' | 'I' | 'N' | 'S' =>
-        case 'E' => pendingError = errorFrom(m.body)
+        case 'E' => pendingError = errorFrom(java.util.Arrays.copyOf(body.array, body.size))
         case 'Z' =>
           done = true
           if (pendingError != null) { val e = pendingError; pendingError = null; throw e }
-          return null
+          return false
         case other => throw new java.io.IOException(
           s"postgres_scan native client: unexpected '$other' mid-query")
       }
     }
-    null // unreachable
+    false // unreachable
+  }
+
+  private[graft] def cellCount: Int = cells
+  private[graft] def cellBytes: Array[Byte] = body.array
+  private[graft] def cellOffset(i: Int): Int = cellOffsets(i)
+  private[graft] def cellLength(i: Int): Int = cellLengths(i)
+
+  /** DataRow body: int16 count, then per cell an int32 length (-1 =
+    * NULL) and its bytes. */
+  private def locateCells(): Unit = {
+    def malformed = new java.io.IOException(
+      "postgres_scan native client: malformed DataRow")
+    if (body.size < 2) throw malformed
+    val n = body.getShort(0).toInt
+    if (n < 0) throw malformed
+    if (n > cellOffsets.length) {
+      cellOffsets = new Array[Int](n); cellLengths = new Array[Int](n)
+    }
+    var pos = 2
+    var i = 0
+    while (i < n) {
+      if (body.size - pos < 4) throw malformed
+      val len = body.getInt(pos)
+      pos += 4
+      if (len > body.size - pos) throw malformed
+      cellOffsets(i) = pos
+      cellLengths(i) = len
+      if (len > 0) pos += len
+      i += 1
+    }
+    cells = n
+  }
+
+  private def rowDescription(): Unit = {
+    val bb = java.nio.ByteBuffer.wrap(body.array, 0, body.size)
+    val n = bb.getShort.toInt
+    val fs = new Array[Int](n)
+    fieldsVar = (0 until n).map { i =>
+      val nameBytes = new java.io.ByteArrayOutputStream()
+      var b = bb.get()
+      while (b != 0) { nameBytes.write(b); b = bb.get() }
+      bb.getInt; bb.getShort // table oid, attnum
+      val oid = bb.getInt
+      bb.getShort; bb.getInt // typlen, typmod
+      fs(i) = bb.getShort.toInt // format code (authoritative)
+      (new String(nameBytes.toByteArray, UTF_8), oid)
+    }.toArray
+    fieldFormatsVar = fs
   }
 
   /** Run a query to completion and return only the RowDescription —
     * the schema-inference path (`SELECT ... LIMIT 0`). */
   def describe(sql: String): Array[(String, Int)] = {
     execute(sql)
-    while (fetchRow() != null) {} // LIMIT 0: drains straight to 'Z'
+    while (nextRow()) {} // LIMIT 0: drains straight to 'Z'
     fields
   }
 

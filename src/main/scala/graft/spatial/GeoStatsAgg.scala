@@ -54,7 +54,11 @@ object GeoStatsAgg extends Aggregator[Array[Byte], GeoStats, GeoStats] {
   override def bufferEncoder: Encoder[GeoStats] = Encoders.product[GeoStats]
   override def outputEncoder: Encoder[GeoStats] = Encoders.product[GeoStats]
 
-  /** Register as the SQL aggregate `geo_stats(geom)`. */
+  /** Register as the SQL aggregate `geo_stats(geom)`; idempotent, so a
+    * session `Graft.install` already set up logs no "replaced a
+    * previously registered function" warning. */
   def register(spark: SparkSession): Unit =
-    spark.udf.register("geo_stats", udaf(GeoStatsAgg))
+    if (!spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("geo_stats")))
+      spark.udf.register("geo_stats", udaf(GeoStatsAgg))
 }

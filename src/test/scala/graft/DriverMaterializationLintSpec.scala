@@ -3,13 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint: driver-side materialization (`collect`/`head`/
-  * `toLocalIterator`) is the one pattern that silently breaks the
+  * `toLocalIterator`/`executeToIterator`) is the one pattern that silently breaks the
   * 100 TB posture — an operator that iterates a collect is not
   * distributed. Every current site is audited-bounded:
   *
-  *  - PgServer: wire-protocol row rendering (the server's job; the
-  *    simple protocol is row-limited, the extended path streams via
-  *    toLocalIterator)
+  *  - PgServer: the collect that runs a command (empty result), in
+  *    the simple and the extended protocol
+  *  - PgWire: wire-protocol row rendering (the server's job; every
+  *    result, simple-protocol (row-limited), extended or COPY, streams
+  *    partition by partition through `resultRows`)
   *  - InfoSchemaPlugin: catalog listings (metadata-sized)
   *  - SpatialJoin: the ≤10k KDB envelope sample + the 1-row global
   *    bounds aggregate
@@ -29,14 +31,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class DriverMaterializationLintSpec extends AnyFunSuite {
 
   private val Pattern =
-    """\.collect\(\)|collectAsList|\.head\(\)|\.toLocalIterator""".r
+    """\.collect\(\)|collectAsList|\.head\(\)|\.toLocalIterator|\.executeToIterator""".r
 
   /** file (relative to src/main/scala/graft) -> audited site count */
   private val Budget = Map(
-    // 6th site (round 7): binary COPY OUT's toLocalIterator — the same
-    // streaming wire-render role as the text COPY path, never a full
-    // driver materialization
-    "server/PgServer.scala" -> 6,
+    // the simple and extended protocols' command collects; their four
+    // result-streaming toLocalIterator sites became PgWire.resultRows
+    "server/PgServer.scala" -> 2,
+    // resultRows: every wire result streams through this one
+    // executeToIterator, never a full driver materialization
+    "server/PgWire.scala" -> 1,
     // round 8: visibleTables' three catalog-listing collects moved from
     // InfoSchemaPlugin into the shared LiveCatalog (pg_class snapshot);
     // all remain metadata-sized listings

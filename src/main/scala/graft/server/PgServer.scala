@@ -980,8 +980,6 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
       }
       out.copyOutResponse(schema.size, binary)
       if (binary) out.copyData(PgWire.CopyBinaryHeader)
-      if (header)
-        out.copyData((schema.fieldNames.map(csvField).mkString(",") + "\n").getBytes(UTF_8))
       // a binary COPY row has a DataRow's body: every field in its
       // binary form (PGCOPY file format)
       val enc = PgWire.ResultEncoder(sess, schema, Seq(if (binary) 1 else 0),
@@ -989,6 +987,7 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
           if (binary) PgWire.Framing.CopyBinary
           else if (csv) PgWire.Framing.CopyCsv
           else PgWire.Framing.CopyText)
+      if (header) out.msg(enc.tag)(enc.csvHeader(schema.fieldNames, _))
       val n = send(out, PgWire.resultRows(df), enc)
       if (binary) out.copyData(PgWire.CopyBinaryTrailer)
       out.copyDone()
@@ -999,11 +998,6 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         out.errorResponse(sqlStateOf(e), String.valueOf(e.getMessage).take(800))
         true
     }
-
-  private def csvField(s: String): String =
-    if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
 
   private def describe(sess: SparkSession, out: PgWire.Out, sql: String, isStatement: Boolean,
       resultFormats: Seq[Int] = Nil): Unit =

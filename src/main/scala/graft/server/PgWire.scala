@@ -791,6 +791,18 @@ object PgWire {
       b.writeByte('\n')
       cell.shrink()
     }
+
+    /** The header line of a CSV COPY: the column names, each quoted as
+      * a data cell would be. */
+    def csvHeader(names: Seq[String], b: WireBuffer): Unit = {
+      names.zipWithIndex.foreach { case (n, i) =>
+        if (i > 0) b.writeByte(',')
+        cell.reset()
+        cell.write(n.getBytes(UTF_8))
+        csvCell(cell, b)
+      }
+      b.writeByte('\n')
+    }
   }
 
   object ResultEncoder {
@@ -873,23 +885,20 @@ object PgWire {
   // between the hybrid Julian and the proleptic Gregorian calendar in
   // any zone; earlier values take the converter
   private val Epoch1900Micros = Epoch1900Millis * 1000L
-  private val Epoch10000Micros = 253402300800000000L // 10000-01-01T00:00:00Z
   private val Epoch1900Day = -25567    // 1900-01-01
   private val Year9999LastDay = 2932896 // 9999-12-31
 
-  private val LowerHex = "0123456789abcdef".getBytes(UTF_8)
   private val UpperHex = "0123456789ABCDEF".getBytes(UTF_8)
 
-  private def writeHex(bytes: Array[Byte], digits: Array[Byte], b: WireBuffer): Unit = {
-    var i = 0
-    while (i < bytes.length) {
-      b.writeByte(digits((bytes(i) >> 4) & 0xf)); b.writeByte(digits(bytes(i) & 0xf))
-      i += 1
+  /** PostGIS text output for geometry: uppercase hex EWKB, no \x. */
+  private val HexEwkb: CellWriter = (g, i, b) => {
+    val bytes = g.getBinary(i)
+    var k = 0
+    while (k < bytes.length) {
+      b.writeByte(UpperHex((bytes(k) >> 4) & 0xf)); b.writeByte(UpperHex(bytes(k) & 0xf))
+      k += 1
     }
   }
-
-  /** PostGIS text output for geometry: uppercase hex EWKB, no \x. */
-  private val HexEwkb: CellWriter = (g, i, b) => writeHex(g.getBinary(i), UpperHex, b)
 
   private def cellWriter(dt: DataType, binary: Boolean,
       zone: java.time.ZoneId): CellWriter = {
@@ -922,32 +931,7 @@ object PgWire {
       case ArrayType(et, _) => new ArrayWriter(et, cellWriter(et, binary = true, zone))
       case _ => converted
     } else dt match {
-      case BooleanType => (g, i, b) => b.writeByte(if (g.getBoolean(i)) 't' else 'f')
-      case ByteType    => (g, i, b) => writeDecimal(g.getByte(i), b)
-      case ShortType   => (g, i, b) => writeDecimal(g.getShort(i), b)
-      case IntegerType => (g, i, b) => writeDecimal(g.getInt(i), b)
-      case LongType    => (g, i, b) => writeDecimal(g.getLong(i), b)
-      case FloatType   => (g, i, b) =>
-        b.writeAscii(pgFloatText(java.lang.Float.toString(g.getFloat(i))))
-      case DoubleType  => (g, i, b) =>
-        b.writeAscii(pgFloatText(java.lang.Double.toString(g.getDouble(i))))
-      case StringType  => (g, i, b) => writeUtf8(g.getUTF8String(i), b)
-      case BinaryType  => (g, i, b) => { b.writeAscii("\\x"); writeHex(g.getBinary(i), LowerHex, b) }
-      case DateType => (g, i, b) => {
-        val d = g.getInt(i)
-        if (d >= Epoch1900Day && d <= Year9999LastDay)
-          writeDate(java.time.LocalDate.ofEpochDay(d), b)
-        else converted.write(g, i, b)
-      }
-      case _: TimestampType => (g, i, b) => {
-        val us = g.getLong(i)
-        // bounded above too, so the wall cannot overflow a long
-        if (us >= Epoch1900Micros && us < Epoch10000Micros) writeWall(wall(us), b)
-        else converted.write(g, i, b)
-      }
-      case _: TimestampNTZType => (g, i, b) => writeWall(g.getLong(i), b)
-      case d: DecimalType => (g, i, b) =>
-        b.writeAscii(g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString)
+      case StringType => (g, i, b) => writeUtf8(g.getUTF8String(i), b)
       case _ => converted
     }
   }
@@ -997,51 +981,6 @@ object PgWire {
       if (fixed) us + fixedMicros
       else us + rules.getOffset(java.time.Instant.ofEpochSecond(
         Math.floorDiv(us, 1000000L))).getTotalSeconds * 1000000L
-  }
-
-  private def writeDecimal(v: Long, b: WireBuffer): Unit =
-    if (v == Long.MinValue) b.writeAscii("-9223372036854775808")
-    else {
-      if (v < 0) b.writeByte('-')
-      val n = math.abs(v)
-      var width = 1
-      var t = n
-      while (t >= 10) { t /= 10; width += 1 }
-      writeDigits(n, width, b)
-    }
-
-  /** `n` (>= 0) as exactly `width` decimal digits, zero-padded. */
-  private def writeDigits(n0: Long, width: Int, b: WireBuffer): Unit = {
-    b.ensure(width)
-    var n = n0
-    var k = b.size + width - 1
-    while (k >= b.size) { b.array(k) = ('0' + n % 10).toByte; n /= 10; k -= 1 }
-    b.size += width
-  }
-
-  /** yyyy-MM-dd for years 1-9999. */
-  private def writeDate(d: java.time.LocalDate, b: WireBuffer): Unit = {
-    writeDigits(d.getYear, 4, b); b.writeByte('-')
-    writeDigits(d.getMonthValue, 2, b); b.writeByte('-')
-    writeDigits(d.getDayOfMonth, 2, b)
-  }
-
-  /** Wall-clock micros as `tsFmt` prints them. */
-  private def writeWall(wall: Long, b: WireBuffer): Unit = {
-    val sec = Math.floorDiv(wall, 1000000L)
-    val us = Math.floorMod(wall, 1000000L)
-    val date = java.time.LocalDate.ofEpochDay(Math.floorDiv(sec, 86400L))
-    if (date.getYear < 1 || date.getYear > 9999)
-      b.writeAscii(java.time.LocalDateTime.ofEpochSecond(sec, us.toInt * 1000,
-        java.time.ZoneOffset.UTC).format(tsFmt))
-    else {
-      val sod = Math.floorMod(sec, 86400L)
-      writeDate(date, b); b.writeByte(' ')
-      writeDigits(sod / 3600, 2, b); b.writeByte(':')
-      writeDigits(sod / 60 % 60, 2, b); b.writeByte(':')
-      writeDigits(sod % 60, 2, b); b.writeByte('.')
-      writeDigits(us, 6, b)
-    }
   }
 
   /** A string's bytes as `toString.getBytes(UTF_8)` gives them: as they

@@ -378,12 +378,18 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
           case 'D' => guarded { // Describe portal/statement
             val kind = m.body(0).toChar
             val name = new String(m.body, 1, m.body.length - 2, UTF_8)
-            val (sql, fmts) =
-              if (kind == 'S') (statements.getOrElse(name, ""), Nil)
-              else portals.get(name)
-                .map(p => (p.sql, p.resultFormats)).getOrElse(("", Nil))
-            if (sql.isEmpty) out.noData()
-            else describe(sess, out, sql, kind == 'S', fmts)
+            if (kind == 'S') {
+              val sql = statements.getOrElse(name, "")
+              if (sql.isEmpty) out.noData()
+              else describe(sess, out, sql, isStatement = true)
+            } else portals.get(name) match {
+              case Some(p) if p.sql.nonEmpty =>
+                // a portal without parameters keeps what Describe
+                // analyzed, so its Execute does not analyze it again
+                val df = describe(sess, out, p.sql, isStatement = false, p.resultFormats)
+                if (p.args.isEmpty) portals(name) = p.copy(described = df)
+              case _ => out.noData()
+            }
           }
           case 'E' => guarded { // Execute portal (with row-limit suspension)
             val buf = java.nio.ByteBuffer.wrap(m.body)
@@ -582,8 +588,10 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
     "md5" + hex(md.digest())
   }
 
-  /** A bound portal (sql + args + requested result formats). */
-  private final case class Portal(sql: String, args: Seq[Any], resultFormats: Seq[Int])
+  /** A bound portal (sql + args + requested result formats), with the
+    * DataFrame its Describe analyzed until its Execute takes it. */
+  private final case class Portal(sql: String, args: Seq[Any], resultFormats: Seq[Int],
+      described: Option[org.apache.spark.sql.DataFrame] = None)
 
   /** A portal mid-execution: the row iterator and its encoder survive
     * across Execute messages until exhausted (PortalSuspended in
@@ -734,12 +742,14 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         case None => portals.get(name) match {
           // COPY is legal through the extended protocol too (PG spec:
           // Execute on a COPY portal starts the copy sub-protocol)
-          case Some(Portal(CopyInRe(table, _, cols, opts), _, _)) =>
+          case Some(Portal(CopyInRe(table, _, cols, opts), _, _, _)) =>
             errored = copyIn(sess, out, in, table, cols, opts); None
-          case Some(Portal(CopyRe(source, opts), _, _)) =>
+          case Some(Portal(CopyRe(source, opts), _, _, _)) =>
             errored = copyOut(sess, out, source, opts); None
-          case Some(Portal(sql, args, fmts)) if sql.nonEmpty =>
-            val df = if (args.isEmpty) sess.sql(sql) else Prepared.execute(sess, sql, args)
+          case Some(p @ Portal(sql, args, fmts, described)) if sql.nonEmpty =>
+            if (described.isDefined) portals(name) = p.copy(described = None)
+            val df = described.getOrElse(
+              if (args.isEmpty) sess.sql(sql) else Prepared.execute(sess, sql, args))
             if (df.schema.isEmpty) {
               df.collect()
               out.commandComplete(commandTag(sql, writtenRows(df)))
@@ -999,14 +1009,19 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         true
     }
 
+  /** Answer Describe with the statement's parameter types (for a
+    * statement) and its row shape, analyzing `sql` with NULL for each
+    * parameter. @return the analyzed DataFrame when it is `sql`'s own
+    * (no parameter was stood in for), so Execute can run it as is. */
   private def describe(sess: SparkSession, out: PgWire.Out, sql: String, isStatement: Boolean,
-      resultFormats: Seq[Int] = Nil): Unit =
+      resultFormats: Seq[Int] = Nil): Option[org.apache.spark.sql.DataFrame] =
     try {
       if (isStatement) {
         val n = "\\$(\\d+)".r.findAllMatchIn(sql).map(_.group(1).toInt).maxOption.getOrElse(0)
         out.parameterDescription(Seq.fill(n)(1043)) // untyped -> varchar
       }
-      val df = sess.sql(Prepared.rewrite(sql).replaceAll(":p\\d+", "NULL"))
+      val text = Prepared.rewrite(sql).replaceAll(":p\\d+", "NULL")
+      val df = sess.sql(text)
       val schema = df.schema
       if (schema.isEmpty) out.noData()
       else {
@@ -1016,7 +1031,8 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
           PgWire.resultFormat(resultFormats, i, schema(i).dataType))
         out.rowDescription(columnOids(schema, geometryFlags(df)), effective)
       }
-    } catch { case NonFatal(_) => out.noData() }
+      if (text == sql) Some(df) else None
+    } catch { case NonFatal(_) => out.noData(); None }
 
   private def runQuery(sess: SparkSession, out: PgWire.Out, sql: String, args: Seq[Any],
       describeOnly: Boolean, withDescription: Boolean = true): Boolean =

@@ -708,8 +708,10 @@ object PgWire {
 
   // ---- result encoding straight from Catalyst rows ----
 
+  import org.apache.spark.{SparkEnv, TaskContext}
+  import org.apache.spark.io.LZ4CompressionCodec
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+  import org.apache.spark.sql.catalyst.expressions.{SpecializedGetters, UnsafeRow}
   import org.apache.spark.unsafe.Platform
   import org.apache.spark.unsafe.types.UTF8String
 
@@ -721,15 +723,96 @@ object PgWire {
     if (formats.nonEmpty && formats(i % formats.size) == 1 && binaryCapable(dt)) 1
     else 0
 
-  /** `df`'s result as Catalyst rows, fetched partition by partition.
-    * It runs as one SQL execution, as Dataset's toLocalIterator does:
-    * query-execution listeners see it, and its jobs belong to the
-    * calling thread's job group (so a CancelRequest reaches them). */
+  /** `df`'s result as Catalyst rows. It runs as one SQL execution, as
+    * Dataset's collect does: query-execution listeners see it, and its
+    * jobs belong to the calling thread's job group (so a CancelRequest
+    * reaches them).
+    *
+    * A plan whose root already holds its rows on the driver (a local
+    * table, a command's result, a limit over either) answers from them
+    * and starts no job. Any other plan runs one job per partition, in
+    * partition order, as the caller reads (see [[PackedRows]]): only
+    * one partition's rows are on the driver at a time, and each must
+    * fit `spark.driver.maxResultSize`. A returned row is valid until
+    * the next call of `next()`. */
   def resultRows(df: org.apache.spark.sql.DataFrame): Iterator[InternalRow] = {
     val qe = df.queryExecution
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
-      qe.executedPlan.resetMetrics()
-      qe.executedPlan.executeToIterator()
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("resultRows")) {
+      val plan = qe.executedPlan
+      plan.resetMetrics()
+      if (onDriver(plan)) plan.executeCollect().iterator
+      else new PackedRows(plan.execute(), plan.output.length)
+    }
+  }
+
+  private def onDriver(plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution._
+    plan match {
+      case _: LocalTableScanExec | _: CommandResultExec => true
+      case l: CollectLimitExec                          => onDriver(l.child)
+      case _                                            => false
+    }
+  }
+
+  /** The rows of `rdd`'s partitions, one job per partition, run when
+    * the reader reaches it. The task packs its partition's `UnsafeRow`s
+    * into one byte array: each row's size, then its bytes, through an
+    * LZ4 block stream (what Spark's own collect ships), ended by -1.
+    * The driver reads them back into one reused row. */
+  private final class PackedRows(rdd: org.apache.spark.rdd.RDD[InternalRow],
+      fields: Int) extends Iterator[InternalRow] {
+    private val parts = rdd.partitions.length
+    private val codec = new LZ4CompressionCodec(SparkEnv.get.conf)
+    private var part = 0
+    private var in: DataInputStream = _
+    private var rowSize = -1 // the next row's size in bytes; -1 = not read yet
+    private var bytes = new Array[Byte](256)
+    private val row = new UnsafeRow(fields)
+
+    def hasNext: Boolean = {
+      while (rowSize < 0) {
+        if (in != null) {
+          rowSize = in.readInt()
+          if (rowSize < 0) in = null
+        } else if (part == parts) return false
+        else {
+          val packed = rdd.sparkContext.runJob(rdd, PackRows, Seq(part)).head
+          part += 1
+          in = new DataInputStream(
+            codec.compressedInputStream(new java.io.ByteArrayInputStream(packed)))
+        }
+      }
+      true
+    }
+
+    def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("end of result")
+      if (bytes.length < rowSize) bytes = new Array[Byte](math.max(rowSize, bytes.length * 2))
+      in.readFully(bytes, 0, rowSize)
+      row.pointTo(bytes, rowSize)
+      rowSize = -1
+      row
+    }
+  }
+
+  /** The task side of [[PackedRows]]. A named object rather than a
+    * lambda: the job's closure cleaner then has no capturing class to
+    * parse. */
+  private object PackRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[Byte]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Byte] = {
+      val packed = new java.io.ByteArrayOutputStream(32 * 1024)
+      val out = new DataOutputStream(
+        new LZ4CompressionCodec(SparkEnv.get.conf).compressedOutputStream(packed))
+      val buffer = new Array[Byte](4 * 1024)
+      while (rows.hasNext) {
+        val r = rows.next().asInstanceOf[UnsafeRow]
+        out.writeInt(r.getSizeInBytes)
+        r.writeToStream(out, buffer)
+      }
+      out.writeInt(-1)
+      out.close()
+      packed.toByteArray
     }
   }
 

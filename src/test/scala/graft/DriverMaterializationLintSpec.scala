@@ -3,15 +3,17 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint: driver-side materialization (`collect`/`head`/
-  * `toLocalIterator`/`executeToIterator`) is the one pattern that silently breaks the
-  * 100 TB posture — an operator that iterates a collect is not
-  * distributed. Every current site is audited-bounded:
+  * `toLocalIterator`/`executeToIterator`, and the physical-plan forms
+  * `executeCollect`/`runJob`/`submitJob`) is the one pattern that
+  * silently breaks the 100 TB posture — an operator that iterates a
+  * collect is not distributed. Every current site is audited-bounded:
   *
   *  - PgServer: the collect that runs a command (empty result), in
   *    the simple and the extended protocol
   *  - PgWire: wire-protocol row rendering (the server's job; every
   *    result, simple-protocol (row-limited), extended or COPY, streams
-  *    partition by partition through `resultRows`)
+  *    one partition at a time through `resultRows`)
+  *  - SpatialJoinPlans: the broadcast spatial join's build side
   *  - InfoSchemaPlugin: catalog listings (metadata-sized)
   *  - SpatialJoin: the ≤10k KDB envelope sample + the 1-row global
   *    bounds aggregate
@@ -31,16 +33,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class DriverMaterializationLintSpec extends AnyFunSuite {
 
   private val Pattern =
-    """\.collect\(\)|collectAsList|\.head\(\)|\.toLocalIterator|\.executeToIterator""".r
+    ("""\.collect\(\)|collectAsList|\.head\(\)|\.toLocalIterator|\.executeToIterator""" +
+      """|runJob\(|submitJob\(|executeCollect\(""").r
 
   /** file (relative to src/main/scala/graft) -> audited site count */
   private val Budget = Map(
     // the simple and extended protocols' command collects; their four
     // result-streaming toLocalIterator sites became PgWire.resultRows
     "server/PgServer.scala" -> 2,
-    // resultRows: every wire result streams through this one
-    // executeToIterator, never a full driver materialization
-    "server/PgWire.scala" -> 1,
+    // resultRows: a driver-resident root's executeCollect (its rows
+    // are on the driver already), else one runJob per partition, run
+    // as the client reads — never a full driver materialization
+    "server/PgWire.scala" -> 2,
+    // the broadcast spatial join collects its build side, a side the
+    // planner picks only when its size estimate is under the limit
+    "plans/SpatialJoinPlans.scala" -> 1,
     // round 8: visibleTables' three catalog-listing collects moved from
     // InfoSchemaPlugin into the shared LiveCatalog (pg_class snapshot);
     // all remain metadata-sized listings

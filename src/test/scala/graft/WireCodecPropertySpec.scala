@@ -438,32 +438,38 @@ class WireCodecPropertySpec extends GraftSuite {
         val vals = new Values(zoneId.hashCode * 31L + (if (java8) 1 else 0))
         val rows = Seq.fill(150)(Row.fromSeq(columns.map { case (_, gen) => vals.orNull(gen(vals)) }))
         import scala.jdk.CollectionConverters._
-        val df = sess.createDataFrame(rows.asJava, schema)
-        val collected = df.collect()
-        val internal = PgWire.resultRows(df).toArray
-        assert(collected.length == internal.length)
-        val zone = PgWire.sessionZone(sess)
-        def bytes(enc: ResultEncoder, i: Int): Array[Byte] = {
-          val b = new PgWire.WireBuffer()
-          enc.write(internal(i), b)
-          java.util.Arrays.copyOf(b.array, b.size)
-        }
-        for (formats <- Seq(Seq(0), Seq(1), Seq(1, 0))) {
-          val enc = ResultEncoder(sess, schema, formats, geom)
-          for (i <- collected.indices) {
-            val want = referenceFields(collected(i), schema, formats, zone)
-            val got = bytes(enc, i)
-            assert(got.sameElements(want), s"zone=$zoneId java8=$java8 " +
-              s"formats=$formats ${firstDiff(got, want)} row=${collected(i)}")
+        val local = sess.createDataFrame(rows.asJava, schema)
+        // the same rows over four partitions: a job per partition packs
+        // its rows, and the driver reads them back through one reused row
+        val partitioned = sess.createDataFrame(
+          sess.sparkContext.parallelize(rows, 4), schema)
+        for ((frame, df) <- Seq("local" -> local, "partitioned" -> partitioned)) {
+          val collected = df.collect()
+          val internal = PgWire.resultRows(df).map(_.copy()).toArray
+          assert(collected.length == internal.length)
+          val zone = PgWire.sessionZone(sess)
+          def bytes(enc: ResultEncoder, i: Int): Array[Byte] = {
+            val b = new PgWire.WireBuffer()
+            enc.write(internal(i), b)
+            java.util.Arrays.copyOf(b.array, b.size)
           }
-        }
-        for (csv <- Seq(false, true)) {
-          val enc = ResultEncoder(sess, schema, Seq(0),
-            framing = if (csv) Framing.CopyCsv else Framing.CopyText)
-          for (i <- collected.indices)
-            assert(new String(bytes(enc, i), "UTF-8") ==
-              referenceLine(collected(i), csv, zone),
-              s"zone=$zoneId java8=$java8 csv=$csv row=${collected(i)}")
+          for (formats <- Seq(Seq(0), Seq(1), Seq(1, 0))) {
+            val enc = ResultEncoder(sess, schema, formats, geom)
+            for (i <- collected.indices) {
+              val want = referenceFields(collected(i), schema, formats, zone)
+              val got = bytes(enc, i)
+              assert(got.sameElements(want), s"$frame zone=$zoneId java8=$java8 " +
+                s"formats=$formats ${firstDiff(got, want)} row=${collected(i)}")
+            }
+          }
+          for (csv <- Seq(false, true)) {
+            val enc = ResultEncoder(sess, schema, Seq(0),
+              framing = if (csv) Framing.CopyCsv else Framing.CopyText)
+            for (i <- collected.indices)
+              assert(new String(bytes(enc, i), "UTF-8") ==
+                referenceLine(collected(i), csv, zone),
+                s"$frame zone=$zoneId java8=$java8 csv=$csv row=${collected(i)}")
+          }
         }
       }
     } finally java.util.TimeZone.setDefault(prevTz)

@@ -708,8 +708,9 @@ object PgWire {
 
   // ---- result encoding straight from Catalyst rows ----
 
-  import org.apache.spark.{SparkEnv, TaskContext}
-  import org.apache.spark.io.LZ4CompressionCodec
+  import org.apache.spark.{SparkConf, SparkEnv, TaskContext}
+  import org.apache.spark.io.{CompressionCodec, LZ4CompressionCodec, LZFCompressionCodec,
+    SnappyCompressionCodec, ZStdCompressionCodec}
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.{SpecializedGetters, UnsafeRow}
   import org.apache.spark.unsafe.Platform
@@ -728,41 +729,42 @@ object PgWire {
     * jobs belong to the calling thread's job group (so a CancelRequest
     * reaches them).
     *
-    * A plan whose root already holds its rows on the driver (a local
-    * table, a command's result, a limit over either) answers from them
-    * and starts no job. Any other plan runs one job per partition, in
-    * partition order, as the caller reads (see [[PackedRows]]): only
-    * one partition's rows are on the driver at a time, and each must
-    * fit `spark.driver.maxResultSize`. A returned row is valid until
-    * the next call of `next()`. */
+    * The plan runs one job per partition, in partition order, as the
+    * caller reads (see [[PackedRows]]); a plan without partitions, such
+    * as a `LIMIT 0`, runs none. Only one partition's rows are on the
+    * driver at a time, and each must fit `spark.driver.maxResultSize`.
+    * A returned row is valid until the next call of `next()`. */
   def resultRows(df: org.apache.spark.sql.DataFrame): Iterator[InternalRow] = {
     val qe = df.queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("resultRows")) {
       val plan = qe.executedPlan
       plan.resetMetrics()
-      if (onDriver(plan)) plan.executeCollect().iterator
-      else new PackedRows(plan.execute(), plan.output.length)
+      new PackedRows(plan.execute(), plan.output.length)
     }
   }
 
-  private def onDriver(plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
-    import org.apache.spark.sql.execution._
-    plan match {
-      case _: LocalTableScanExec | _: CommandResultExec => true
-      case l: CollectLimitExec                          => onDriver(l.child)
-      case _                                            => false
+  /** The codec Spark's own collect compresses task results with
+    * (`spark.io.compression.codec`, a short name or a class name). */
+  private def resultCodec(conf: SparkConf): CompressionCodec = {
+    val name = conf.get("spark.io.compression.codec", "lz4")
+    val cls = name.toLowerCase(java.util.Locale.ROOT) match {
+      case "lz4"    => classOf[LZ4CompressionCodec]
+      case "lzf"    => classOf[LZFCompressionCodec]
+      case "snappy" => classOf[SnappyCompressionCodec]
+      case "zstd"   => classOf[ZStdCompressionCodec]
+      case _        => Class.forName(name)
     }
+    cls.getConstructor(classOf[SparkConf]).newInstance(conf).asInstanceOf[CompressionCodec]
   }
 
   /** The rows of `rdd`'s partitions, one job per partition, run when
     * the reader reaches it. The task packs its partition's `UnsafeRow`s
-    * into one byte array: each row's size, then its bytes, through an
-    * LZ4 block stream (what Spark's own collect ships), ended by -1.
-    * The driver reads them back into one reused row. */
+    * into chunks of up to 1 MiB (see [[PackRows]]); the driver reads
+    * them back across the chunks into one reused row. */
   private final class PackedRows(rdd: org.apache.spark.rdd.RDD[InternalRow],
       fields: Int) extends Iterator[InternalRow] {
     private val parts = rdd.partitions.length
-    private val codec = new LZ4CompressionCodec(SparkEnv.get.conf)
+    private val codec = resultCodec(SparkEnv.get.conf)
     private var part = 0
     private var in: DataInputStream = _
     private var rowSize = -1 // the next row's size in bytes; -1 = not read yet
@@ -776,10 +778,11 @@ object PgWire {
           if (rowSize < 0) in = null
         } else if (part == parts) return false
         else {
-          val packed = rdd.sparkContext.runJob(rdd, PackRows, Seq(part)).head
+          val chunks = rdd.sparkContext.runJob(rdd, PackRows, Seq(part)).head
           part += 1
-          in = new DataInputStream(
-            codec.compressedInputStream(new java.io.ByteArrayInputStream(packed)))
+          val packed = new java.io.SequenceInputStream(java.util.Collections.enumeration(
+            java.util.Arrays.asList(chunks.map(new java.io.ByteArrayInputStream(_)): _*)))
+          in = new DataInputStream(codec.compressedInputStream(packed))
         }
       }
       true
@@ -795,15 +798,15 @@ object PgWire {
     }
   }
 
-  /** The task side of [[PackedRows]]. A named object rather than a
-    * lambda: the job's closure cleaner then has no capturing class to
-    * parse. */
-  private object PackRows
-      extends ((TaskContext, Iterator[InternalRow]) => Array[Byte]) with Serializable {
-    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Byte] = {
-      val packed = new java.io.ByteArrayOutputStream(32 * 1024)
-      val out = new DataOutputStream(
-        new LZ4CompressionCodec(SparkEnv.get.conf).compressedOutputStream(packed))
+  /** The task side of [[PackedRows]]: each row's size, then its bytes,
+    * ended by -1, through [[resultCodec]] (what Spark's own collect
+    * ships). A named object rather than a lambda: the job's closure
+    * cleaner then has no capturing class to parse. */
+  private[graft] object PackRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[Array[Byte]]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Array[Byte]] = {
+      val packed = new ChunkedOutput
+      val out = new DataOutputStream(resultCodec(SparkEnv.get.conf).compressedOutputStream(packed))
       val buffer = new Array[Byte](4 * 1024)
       while (rows.hasNext) {
         val r = rows.next().asInstanceOf[UnsafeRow]
@@ -812,8 +815,46 @@ object PgWire {
       }
       out.writeInt(-1)
       out.close()
-      packed.toByteArray
+      packed.chunks
     }
+  }
+
+  /** An output stream into chunks, as Spark's own task results are
+    * written: unlike a growing array it never copies what it holds,
+    * and a partition may pack to more than one array can hold. The chunks
+    * double from 32 KiB up to 1 MiB, so a small result allocates
+    * little. */
+  private final class ChunkedOutput extends OutputStream {
+    private val MaxChunkBytes = 1 << 20
+    private val full = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    private var chunk = new Array[Byte](32 * 1024)
+    private var pos = 0
+
+    private def room(): Unit = if (pos == chunk.length) {
+      full += chunk
+      chunk = new Array[Byte](math.min(MaxChunkBytes, 2 * chunk.length))
+      pos = 0
+    }
+
+    def write(b: Int): Unit = {
+      room()
+      chunk(pos) = b.toByte
+      pos += 1
+    }
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      var done = 0
+      while (done < len) {
+        room()
+        val n = math.min(len - done, chunk.length - pos)
+        System.arraycopy(b, off + done, chunk, pos, n)
+        pos += n
+        done += n
+      }
+    }
+
+    /** The bytes written, the last chunk cut to its length. */
+    def chunks: Array[Array[Byte]] = (full :+ java.util.Arrays.copyOf(chunk, pos)).toArray
   }
 
   /** How a [[ResultEncoder]] frames a row: a DataRow, or the CopyData

@@ -41,10 +41,9 @@ class DriverMaterializationLintSpec extends AnyFunSuite {
     // the simple and extended protocols' command collects; their four
     // result-streaming toLocalIterator sites became PgWire.resultRows
     "server/PgServer.scala" -> 2,
-    // resultRows: a driver-resident root's executeCollect (its rows
-    // are on the driver already), else one runJob per partition, run
-    // as the client reads — never a full driver materialization
-    "server/PgWire.scala" -> 2,
+    // resultRows: one runJob per partition, run as the client reads —
+    // never a full driver materialization
+    "server/PgWire.scala" -> 1,
     // the broadcast spatial join collects its build side, a side the
     // planner picks only when its size estimate is under the limit
     "plans/SpatialJoinPlans.scala" -> 1,

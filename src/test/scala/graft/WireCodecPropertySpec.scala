@@ -475,6 +475,34 @@ class WireCodecPropertySpec extends GraftSuite {
     } finally java.util.TimeZone.setDefault(prevTz)
   }
 
+  test("resultRows: a partition packed into several chunks reads back row for row") {
+    // random bytes do not compress: this one partition packs to about
+    // 6 MiB, so rows straddle the boundaries between its chunks
+    val r = new scala.util.Random(11)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("b", BinaryType), StructField("s", StringType)))
+    val rows = (0 until 12000).map(i => Row(i.toLong,
+      Array.fill(400 + r.nextInt(200))(r.nextInt().toByte),
+      r.alphanumeric.take(r.nextInt(20)).mkString))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    val unsafe = df.queryExecution.toRdd.map(_.copy()).collect()
+    val chunks = PgWire.PackRows(null, unsafe.iterator)
+    assert(chunks.length > 4, s"${chunks.length} chunks")
+    assert(chunks.init.last.length == 1 << 20)
+    val collected = df.collect()
+    val internal = PgWire.resultRows(df).map(_.copy()).toArray
+    assert(collected.length == internal.length)
+    val enc = ResultEncoder(spark, schema, Seq(1))
+    val zone = PgWire.sessionZone(spark)
+    for (i <- collected.indices) {
+      val b = new PgWire.WireBuffer()
+      enc.write(internal(i), b)
+      val got = java.util.Arrays.copyOf(b.array, b.size)
+      val want = referenceFields(collected(i), schema, Seq(1), zone)
+      assert(got.sameElements(want), s"row $i: ${firstDiff(got, want)}")
+    }
+  }
+
   test("ResultEncoder: negative-scale decimals and malformed UTF-8 strings") {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.types.Decimal

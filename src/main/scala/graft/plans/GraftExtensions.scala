@@ -17,6 +17,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectParser((_, delegate) => new GraftSqlParser(delegate))
     e.injectPlannerStrategy(_ => SpatialJoinStrategy)
+    // Parquet scans reuse one reader (and its configuration broadcast)
+    // per distinct scan and configuration
+    e.injectPlannerStrategy(_ => graft.sources.SharedParquetScanStrategy)
     graft.sources.Federation.tableFunctions.foreach(e.injectTableFunction)
     // federation scans resolve against the session owning the query
     // (never SparkSession.active — wrong under concurrent sessions)

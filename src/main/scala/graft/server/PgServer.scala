@@ -612,7 +612,11 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
     * "Geometry" extension name (spatial/src/extension.rs:1-9). Columns
     * read straight from storage are untagged binary and stay bytea,
     * like any engine that loses type fidelity at an untyped boundary. */
-  private[graft] def geometryFlags(df: org.apache.spark.sql.DataFrame): Seq[Boolean] = {
+  private[graft] def geometryFlags(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+    geometryFlags(df.queryExecution.analyzed)
+
+  private def geometryFlags(analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[Boolean] = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, ExprId, Expression, ScalaUDF}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project, Union}
     val producers = mutable.Map[ExprId, Expression]()
@@ -621,7 +625,7 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
     // branch 1 produces geometry. Record every branch's expression per
     // output position; the flag holds only if ALL branches agree.
     val unionBranches = mutable.Map[ExprId, Seq[Expression]]()
-    df.queryExecution.analyzed.foreach {
+    analyzed.foreach {
       case p: Project =>
         p.projectList.foreach {
           case a: Alias => producers(a.exprId) = a.child
@@ -658,7 +662,7 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         }
         case None => producers.get(id).exists(isGeom(_, depth))
       }
-    df.queryExecution.analyzed.output.map { a =>
+    analyzed.output.map { a =>
       a.dataType == org.apache.spark.sql.types.BinaryType &&
         attrIsGeom(a.exprId, 0)
     }
@@ -1021,17 +1025,28 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
         out.parameterDescription(Seq.fill(n)(1043)) // untyped -> varchar
       }
       val text = Prepared.rewrite(sql).replaceAll(":p\\d+", "NULL")
-      val df = sess.sql(text)
-      val schema = df.schema
+      // analyzing a command in SKIP mode does not run it: a command runs
+      // once, at Execute, with its bound parameters. The parser reads
+      // the session's conf (double-quoted identifiers), as `sess.sql` does.
+      val parsed = org.apache.spark.sql.internal.SQLConf.withExistingConf(
+        sess.sessionState.conf)(sess.sessionState.sqlParser.parsePlan(text))
+      val qe = sess.sessionState.executePlan(parsed,
+        org.apache.spark.sql.execution.CommandExecutionMode.SKIP)
+      val plan = qe.analyzed
+      val schema = plan.schema
       if (schema.isEmpty) out.noData()
       else {
         // requested-binary columns without a binary form degrade to
         // text, as the ResultEncoder writes them
         val effective = schema.fields.indices.map(i =>
           PgWire.resultFormat(resultFormats, i, schema(i).dataType))
-        out.rowDescription(columnOids(schema, geometryFlags(df)), effective)
+        out.rowDescription(columnOids(schema, geometryFlags(plan)), effective)
       }
-      if (text == sql) Some(df) else None
+      val isCommand = plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command])
+      // a query's QueryExecution is the same in SKIP mode; Execute runs it
+      if (text == sql && !isCommand)
+        Some(org.apache.spark.sql.graft.QueryExecutions.dataFrame(qe))
+      else None
     } catch { case NonFatal(_) => out.noData(); None }
 
   private def runQuery(sess: SparkSession, out: PgWire.Out, sql: String, args: Seq[Any],

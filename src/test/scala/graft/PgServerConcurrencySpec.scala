@@ -156,6 +156,42 @@ class PgServerConcurrencySpec extends GraftSuite {
     } finally srv.stop()
   }
 
+  test("4 connections scanning the same and different Parquet tables at once are row-exact") {
+    val host = spark.newSession()
+    Tables.registerViews(host, sf)
+    val srv = new PgServer(host, port = 0, password = None)
+    val port = srv.start()
+    // two connections scan the same table, two scan others
+    val sqls = Seq("lineitem", "lineitem", "orders", "documents").map(t => s"SELECT * FROM $t")
+    def answer(c: Client, sql: String): Seq[String] = {
+      c.query(sql); c.dataRows(c.untilReady()).map(_.mkString("|")).sorted
+    }
+    try {
+      val serial = new Client(port)
+      serial.startup()
+      val want = try sqls.distinct.map(q => q -> answer(serial, q)).toMap finally serial.close()
+      assert(want.values.forall(_.nonEmpty))
+      val barrier = new CyclicBarrier(sqls.size)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = sqls.zipWithIndex.map { case (sql, i) =>
+        new Thread(() => {
+          try {
+            val c = new Client(port)
+            c.startup()
+            try (1 to 3).foreach { round =>
+              barrier.await()
+              val got = answer(c, sql)
+              assert(got == want(sql), s"connection $i round $round: $sql differs")
+            } finally c.close()
+          } catch { case t: Throwable => failures.add(t); barrier.reset() }
+        }, s"scan-client-$i")
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join(120000))
+      assert(failures.isEmpty, s"${failures.size} connection(s) failed, first: ${failures.peek()}")
+    } finally srv.stop()
+  }
+
   test("cancel hits only its own connection; neighbors keep working") {
     val srv = new PgServer(spark, port = 0, password = None)
     val port = srv.start()

@@ -1036,4 +1036,42 @@ class PlanQualitySpec extends GraftSuite {
       s"brand/size disjunction not pushed to part:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"part side not broadcast:\n$p")
   }
+
+  test("every Parquet scan plans through the shared reader, AQE final plans included") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    object Plans extends AdaptiveSparkPlanHelper
+    def parquetScans(df: DataFrame): Seq[FileSourceScanExec] = {
+      df.collect() // the adaptive plan is final once the query ran
+      Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[ParquetFileFormat] => s
+      }
+    }
+    def unshared(scans: Seq[FileSourceScanExec]) = scans.filterNot(
+      _.relation.fileFormat.isInstanceOf[graft.sources.SharedParquetFileFormat])
+    // the measured batch slice
+    val batch = Seq("q46_part_affinity", "q50_funnel_conversion", "t34_dup_gram_mass",
+      "d06_dedup_components", "v09_pq_adc_knn", "sp02_dwithin_pairs",
+      "mm05_phash_dedup", "pg04_catalog_join").map { name =>
+      val scans = try parquetScans(SparkEntry.queries(name)(spark, sf))
+        finally graft.util.Persist.releaseAll()
+      assert(unshared(scans).isEmpty, s"$name: ${unshared(scans).map(_.nodeName)}")
+      name -> scans.size
+    }
+    assert(batch.map(_._2).sum > 0, s"no Parquet scan in the batch slice: $batch")
+    // the wire_bulk statements, plus an aggregate and a join, which a
+    // swap installed by an optimizer rule never reached
+    val s = spark.newSession()
+    Tables.registerViews(s, sf)
+    for ((sql, n) <- Seq("lineitem", "events", "documents", "embeddings")
+        .map(t => s"SELECT * FROM $t" -> 1) ++ Seq(
+        "SELECT count(*) FROM lineitem" -> 1,
+        "SELECT l_returnflag, sum(l_quantity) FROM lineitem GROUP BY l_returnflag" -> 1,
+        "SELECT count(*) FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey" -> 2)) {
+      val scans = parquetScans(s.sql(sql))
+      assert(scans.size == n && unshared(scans).isEmpty, s"$sql: ${scans.map(_.relation.fileFormat.getClass)}")
+    }
+  }
 }

@@ -13,11 +13,15 @@ import org.apache.spark.sql.SparkSession
   * spark.sql("SELECT * FROM pg_catalog.pg_type")
   * }}}
   *
-  * Parser shims and the spatial-join planner strategy live in
+  * Parser shims, the spatial-join planner strategy and the analyzer
+  * rule that answers `pg_catalog` / `information_schema` reads live in
   * [[graft.plans.GraftExtensions]] and must be given at build time
   * (`withExtensions`), which [[session]] does; [[install]] covers
   * everything conf- and registry-based (functions, catalogs, compat
-  * UDFs) for sessions built elsewhere.
+  * UDFs) for sessions built elsewhere. Catalog tables, bare or
+  * qualified, are read only on a session with the extensions: on a
+  * session wired by [[install]] alone, `pg_catalog.*` resolves but its
+  * read fails at analysis.
   */
 object Graft {
 

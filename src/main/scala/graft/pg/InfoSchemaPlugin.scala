@@ -1,60 +1,20 @@
 package graft.pg
 
-import java.util
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** `information_schema` as a DataSource-V2 catalog — the reference
   * enables DataFusion's information_schema (context.rs:33-55,
   * `information_schema=true`), which BI tools and drivers probe for
   * table/column discovery. Unlike pg_catalog's fixed rows, these
   * tables snapshot the LIVE session catalog (databases, tables, temp
-  * views, columns) at scan-planning time.
+  * views, columns) when a query reading them is analyzed
+  * ([[ResolvePgCatalog]]).
   */
-final class InfoSchemaPlugin extends TableCatalog {
-
-  import InfoSchemaPlugin._
-
-  private var catalogName = "information_schema"
-
-  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit =
-    catalogName = name
-
-  override def name(): String = catalogName
-
-  override def listTables(namespace: Array[String]): Array[Identifier] =
-    tableNames.map(n => Identifier.of(Array.empty[String], n)).toArray
-
-  override def loadTable(ident: Identifier): Table = ident.name.toLowerCase match {
-    case "schemata" => new DynamicTable("schemata", schemataSchema, schemataRows)
-    case "tables"   => new DynamicTable("tables", tablesSchema, tablesRows)
-    case "columns"  => new DynamicTable("columns", columnsSchema, columnsRows)
-    case other => throw new NoSuchTableException(Seq(catalogName, other))
-  }
-
-  override def tableExists(ident: Identifier): Boolean =
-    tableNames.contains(ident.name.toLowerCase)
-
-  override def createTable(ident: Identifier, schema: StructType,
-      partitions: Array[Transform], properties: util.Map[String, String]): Table =
-    throw new UnsupportedOperationException("information_schema is read-only")
-  override def alterTable(ident: Identifier, changes: TableChange*): Table =
-    throw new UnsupportedOperationException("information_schema is read-only")
-  override def dropTable(ident: Identifier): Boolean = false
-  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
-    throw new UnsupportedOperationException("information_schema is read-only")
-}
+final class InfoSchemaPlugin
+    extends ReadOnlyCatalog("information_schema", InfoSchemaPlugin.tables)
 
 object InfoSchemaPlugin {
-  private val tableNames = Set("schemata", "tables", "columns")
 
   private val schemataSchema = StructType(Seq(
     StructField("catalog_name", StringType, nullable = false),
@@ -75,27 +35,20 @@ object InfoSchemaPlugin {
     StructField("data_type", StringType, nullable = false),
     StructField("is_nullable", StringType, nullable = false)))
 
-  import org.apache.spark.sql.Row
-
-  private def schemataRows(): Seq[Row] =
-    SparkSession.active.catalog.listDatabases().collect().toSeq
+  private def schemataRows(spark: SparkSession): Seq[Row] =
+    spark.catalog.listDatabases().collect().toSeq
       .map(db => Row("spark_catalog", db.name))
 
-  /** (schema, name, isTemp) of every table/view visible in the session
-    * — shared with the live pg_class snapshot. */
-  private def visibleTables(): Seq[(String, String, Boolean)] =
-    LiveCatalog.visibleTables()
-
-  private def tablesRows(): Seq[Row] =
-    visibleTables().map { case (db, tbl, temp) =>
+  private def tablesRows(spark: SparkSession): Seq[Row] =
+    LiveCatalog.visibleTables(spark).map { case (db, tbl, temp) =>
       Row("spark_catalog", db, tbl,
         if (db == "global_temp") "GLOBAL TEMPORARY"
         else if (temp) "LOCAL TEMPORARY" else "BASE TABLE")
     }
 
-  private def columnsRows(): Seq[Row] = {
-    val cat = SparkSession.active.catalog
-    visibleTables().flatMap { case (db, tbl, temp) =>
+  private def columnsRows(spark: SparkSession): Seq[Row] = {
+    val cat = spark.catalog
+    LiveCatalog.visibleTables(spark).flatMap { case (db, tbl, temp) =>
       val qualified =
         if (db == "global_temp") s"global_temp.$tbl"
         else if (temp) tbl else s"$db.$tbl"
@@ -106,34 +59,9 @@ object InfoSchemaPlugin {
         }
     }
   }
-}
 
-/** Read-only table whose rows are computed from the live session at
-  * scan-planning time. */
-private[pg] final class DynamicTable(
-    tableName: String, tableSchema: StructType,
-    rowsFn: () => Seq[org.apache.spark.sql.Row])
-    extends Table with SupportsRead {
-  override def name(): String = tableName
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conv = CatalystTypeConverters.createToCatalystConverter(tableSchema)
-    val rows = rowsFn().map(r => conv(r).asInstanceOf[InternalRow].copy()).toArray
-    new DynamicScan(tableName, tableSchema, rows)
-  }
-}
-
-private final class DynamicScan(
-    tableName: String, tableSchema: StructType, rows: Array[InternalRow])
-    extends ScanBuilder with Scan with Batch {
-  override def build(): Scan = this
-  override def readSchema(): StructType = tableSchema
-  override def description(): String = s"information_schema.$tableName"
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(StaticPartition(rows))
-  override def createReaderFactory(): PartitionReaderFactory =
-    StaticReaderFactory
+  private[pg] val tables: Map[String, PgTable] = Map(
+    "schemata" -> new PgTable("schemata", schemataSchema, schemataRows),
+    "tables" -> new PgTable("tables", tablesSchema, tablesRows),
+    "columns" -> new PgTable("columns", columnsSchema, columnsRows))
 }

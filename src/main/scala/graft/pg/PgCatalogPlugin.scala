@@ -1,108 +1,113 @@
 package graft.pg
 
 import java.util
+import java.util.Locale
 
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** A real `pg_catalog` namespace as a DataSource-V2 TableCatalog
-  * (reference A33: catalog/src/postgres/mod.rs:25-52 registers the
-  * catalog tables under a dedicated schema provider — this is the Spark
-  * analogue, so `SELECT ... FROM pg_catalog.pg_type` resolves through
-  * the catalog machinery rather than a parser rewrite; the bare-name
-  * temp views remain for unqualified references).
+/** The `pg_catalog` namespace as a DataSource-V2 TableCatalog over
+  * [[PgCompat.catalogTables]] (reference A33: catalog/src/postgres/
+  * mod.rs:25-52 registers the catalog tables under one dedicated
+  * schema provider; this is the Spark analogue).
   *
   * Wire-up: `spark.sql.catalog.pg_catalog = graft.pg.PgCatalogPlugin`
   * (set by [[PgCompat.registerAll]]); the CatalogManager instantiates
-  * it on first reference. Tables are read-only static batches.
+  * it on first reference. Reads of its tables, qualified or bare, are
+  * answered by [[ResolvePgCatalog]].
   */
-final class PgCatalogPlugin extends TableCatalog {
+final class PgCatalogPlugin extends ReadOnlyCatalog("pg_catalog", PgCompat.catalogTables)
 
-  private var catalogName = "pg_catalog"
+/** Read-only TableCatalog over a fixed name → table map. */
+abstract class ReadOnlyCatalog(defaultName: String, tables: Map[String, PgTable])
+    extends TableCatalog {
+
+  private var catalogName = defaultName
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit =
     catalogName = name
 
   override def name(): String = catalogName
 
-  private lazy val tables: Map[String, Table] = {
-    val static = PgCompat.tableDefs.map { case (n, schema, rows) =>
-      val conv = CatalystTypeConverters.createToCatalystConverter(schema)
-      val internal = rows.map(r => conv(r).asInstanceOf[InternalRow].copy()).toArray
-      n -> (new StaticTable(n, schema, internal): Table)
-    }
-    // pg_class / pg_attribute snapshot the LIVE session catalog at scan
-    // planning (LiveCatalog) — they shadow the static empty pg_class
-    val live = PgCompat.liveTableDefs.map { case (n, schema, fn) =>
-      n -> (new DynamicTable(n, schema, fn): Table)
-    }
-    (static ++ live).toMap
-  }
-
   override def listTables(namespace: Array[String]): Array[Identifier] =
     tables.keysIterator.map(n => Identifier.of(Array.empty[String], n)).toArray
 
   override def loadTable(ident: Identifier): Table =
-    tables.getOrElse(ident.name.toLowerCase,
+    tables.getOrElse(ident.name.toLowerCase(Locale.ROOT),
       throw new NoSuchTableException(Seq(catalogName, ident.name)))
 
   override def tableExists(ident: Identifier): Boolean =
-    tables.contains(ident.name.toLowerCase)
+    tables.contains(ident.name.toLowerCase(Locale.ROOT))
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table =
-    throw new UnsupportedOperationException("pg_catalog is read-only")
+    throw new UnsupportedOperationException(s"$catalogName is read-only")
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table =
-    throw new UnsupportedOperationException("pg_catalog is read-only")
+    throw new UnsupportedOperationException(s"$catalogName is read-only")
 
   override def dropTable(ident: Identifier): Boolean = false
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
-    throw new UnsupportedOperationException("pg_catalog is read-only")
+    throw new UnsupportedOperationException(s"$catalogName is read-only")
 }
 
-/** Read-only in-memory table serving a fixed row set. */
-private[pg] final class StaticTable(
-    tableName: String, tableSchema: StructType, rows: Array[InternalRow])
-    extends Table with SupportsRead {
+/** A read-only catalog table whose rows are computed for the session
+  * reading it: fixed for most of `pg_catalog`, a snapshot of the live
+  * session catalog for `pg_class`, `pg_attribute` and
+  * `information_schema`. It has no scan: [[ResolvePgCatalog]] turns
+  * every read into a driver-side `LocalRelation` during analysis, so a
+  * session without that rule fails the read at analysis ("does not
+  * support batch scan"). */
+final class PgTable(tableName: String, tableSchema: StructType,
+    rowsOf: SparkSession => Seq[Row]) extends Table {
   override def name(): String = tableName
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new StaticScan(tableName, tableSchema, rows)
+    util.Collections.emptySet()
+  def rows(spark: SparkSession): Seq[Row] = rowsOf(spark)
 }
 
-private final class StaticScan(
-    tableName: String, tableSchema: StructType, rows: Array[InternalRow])
-    extends ScanBuilder with Scan with Batch {
-  override def build(): Scan = this
-  override def readSchema(): StructType = tableSchema
-  override def description(): String = s"pg_catalog.$tableName"
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(StaticPartition(rows))
-  override def createReaderFactory(): PartitionReaderFactory =
-    StaticReaderFactory
-}
+/** Analyzer rule (injected by [[graft.plans.GraftExtensions]]) that
+  * answers every catalog table read on the driver:
+  *  - a bare catalog name with no temp view of that name in the session
+  *    resolves to the `pg_catalog` table, PostgreSQL's `pg_temp` before
+  *    `pg_catalog` order (a CTE of that name is substituted before
+  *    resolution and so shadows it too); `public.<name>` resolves to it
+  *    as well, as the reference registers its tables under both schemas;
+  *  - every relation over a [[PgTable]], bare or qualified (`pg_catalog`,
+  *    `information_schema`), becomes a `LocalRelation` of the rows
+  *    computed for `session`, so `ConvertToLocalRelation` folds the
+  *    filters and projections over it.
+  */
+final case class ResolvePgCatalog(session: SparkSession) extends Rule[LogicalPlan] {
 
-private final case class StaticPartition(rows: Array[InternalRow])
-    extends InputPartition
+  private def bareOrPublic(parts: Seq[String]): Option[PgTable] = parts match {
+    case Seq(name) =>
+      PgCompat.catalogTables.get(name.toLowerCase(Locale.ROOT))
+        .filterNot(_ => session.sessionState.catalog.isTempView(parts))
+    case Seq(schema, name) if schema.equalsIgnoreCase("public") =>
+      PgCompat.catalogTables.get(name.toLowerCase(Locale.ROOT))
+    case _ => None
+  }
 
-private object StaticReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val rows = p.asInstanceOf[StaticPartition].rows
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = rows(i)
-      override def close(): Unit = ()
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+    case u: UnresolvedRelation if !u.isStreaming =>
+      bareOrPublic(u.multipartIdentifier).fold[LogicalPlan](u) { t =>
+        SubqueryAlias(u.multipartIdentifier, LocalRelation.fromExternalRows(
+          DataTypeUtils.toAttributes(t.schema()), t.rows(session)))
+      }
+    case r: DataSourceV2Relation => r.table match {
+      case t: PgTable => LocalRelation.fromExternalRows(r.output, t.rows(session))
+      case _ => r
     }
+  }
 }

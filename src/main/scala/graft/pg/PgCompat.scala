@@ -1,8 +1,7 @@
 package graft.pg
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.types._
 
@@ -19,10 +18,11 @@ import org.apache.spark.sql.types._
   *   Arrow "Geometry" extension tag (spatial/src/extension.rs:1-9).
   * - pg_namespace: pg_catalog=11, public=2200, information_schema=13676
   *   (pg_namespace.rs:44-57).
-  * - pg_class / pg_description: empty as bare temp views (reference
-  *   parity, pg_class.rs:58-70); through the `pg_catalog` V2 catalog,
-  *   pg_class and pg_attribute snapshot the LIVE session catalog
-  *   ([[LiveCatalog]], parity-plus: psql `\dt`/`\d` walk them).
+  * - pg_class / pg_attribute: snapshots of the LIVE session catalog
+  *   ([[LiveCatalog]]; the reference ships pg_class empty,
+  *   pg_class.rs:58-70, but psql `\dt`/`\d` walk them), as in
+  *   PostgreSQL for both the bare and the qualified name.
+  * - pg_description: empty.
   * - pg_database: one row, datname='postgres' (postgres/mod.rs:20).
   * - version() -> 'PostgreSQL 14.10 on dataclod' (udf/version.rs:9);
   *   current_schema() -> 'public'; current_schemas(bool) adds
@@ -98,11 +98,10 @@ object PgCompat extends Serializable {
     }
   }
 
-  /** (name, schema, rows) for every emulated catalog table — the single
-    * source both the bare temp views and the `pg_catalog` V2 catalog
-    * (PgCatalogPlugin) serve from. */
-  private[pg] def tableDefs: Seq[(String, StructType, Seq[org.apache.spark.sql.Row])] = {
-    import org.apache.spark.sql.Row
+  /** Every emulated catalog table by name: the one set the `pg_catalog`
+    * V2 catalog ([[PgCatalogPlugin]]) lists and loads, and the names
+    * [[ResolvePgCatalog]] resolves bare and `public.`-qualified. */
+  private[graft] lazy val catalogTables: Map[String, PgTable] = {
     val typeSchema = StructType(Seq(
       StructField("oid", IntegerType, nullable = false),
       StructField("typname", StringType, nullable = false),
@@ -255,10 +254,9 @@ object PgCompat extends Serializable {
       StructField("unit", StringType, nullable = true),
       StructField("category", StringType, nullable = true),
       StructField("short_desc", StringType, nullable = true)))
-    Seq(
+    val fixed = Seq(
       ("pg_type", typeSchema, typeRows),
       ("pg_namespace", nsSchema, nsRows),
-      ("pg_class", pgClassSchema, Nil),
       ("pg_description", descSchema, Nil),
       ("pg_database", dbSchema,
         Seq(Row("postgres", 10, 6, "C", "C", false, true, null))),
@@ -286,19 +284,16 @@ object PgCompat extends Serializable {
       ("pg_settings", settingsSchema,
         Seq(Row("server_version", "10.0", null, "Preset Options", null),
           Row("integer_datetimes", "on", null, "Preset Options", null))))
+      .map { case (name, schema, rows) => new PgTable(name, schema, _ => rows) }
+    val live = Seq(
+      new PgTable("pg_class", pgClassSchema, LiveCatalog.pgClassRows),
+      new PgTable("pg_attribute", pgAttributeSchema, LiveCatalog.pgAttributeRows))
+    (fixed ++ live).map(t => t.name() -> t).toMap
   }
 
-  /** Names of the emulated catalog tables (so the LIVE pg_class
-    * snapshot can exclude the emulation temp views themselves). */
-  private[graft] lazy val emulationTableNames: Set[String] =
-    tableDefs.map(_._1).toSet ++ Set("pg_attribute")
-
   /** Wide pg_class schema covering every column psql's describe paths
-    * touch (server-version-10 query shapes). Served EMPTY as the bare
-    * temp view (reference parity: pg_class.rs:58-70 ships it empty) and
-    * LIVE through the pg_catalog V2 catalog (parity-plus: `\dt` and BI
-    * tools walk pg_class, not information_schema). */
-  private[pg] val pgClassSchema = StructType(Seq(
+    * touch (server-version-10 query shapes). */
+  private val pgClassSchema = StructType(Seq(
     StructField("oid", IntegerType, nullable = false),
     StructField("relname", StringType, nullable = false),
     StructField("relnamespace", IntegerType, nullable = false),
@@ -325,7 +320,7 @@ object PgCompat extends Serializable {
     StructField("relpartbound", StringType, nullable = true)))
 
   /** pg_attribute schema (one row per column of every visible table). */
-  private[pg] val pgAttributeSchema = StructType(Seq(
+  private val pgAttributeSchema = StructType(Seq(
     StructField("attrelid", IntegerType, nullable = false),
     StructField("attname", StringType, nullable = false),
     StructField("atttypid", IntegerType, nullable = false),
@@ -344,21 +339,14 @@ object PgCompat extends Serializable {
     StructField("attinhcount", IntegerType, nullable = false),
     StructField("attcollation", IntegerType, nullable = false)))
 
-  /** Tables whose rows snapshot the LIVE session catalog at scan time —
-    * served only through the pg_catalog V2 catalog (PgCatalogPlugin).
-    * The bare temp views keep the reference's empty pg_class. */
-  private[pg] def liveTableDefs: Seq[(String, StructType, () => Seq[org.apache.spark.sql.Row])] = Seq(
-    ("pg_class", pgClassSchema, () => LiveCatalog.pgClassRows()),
-    ("pg_attribute", pgAttributeSchema, () => LiveCatalog.pgAttributeRows()))
-
-  /** Register catalog views + compat functions + the `pg_catalog` V2
-    * catalog on the session. Idempotent and cheap after the first call
-    * in a JVM: the views are installed from plans built once (see
-    * [[registerViews]]) and the functions are registered only where
-    * they are missing, so a connection bootstrap or a repeated call on
-    * an installed session runs no Catalyst analysis. */
+  /** Register the compat functions and the `pg_catalog` and
+    * `information_schema` V2 catalogs on the session. Idempotent and
+    * cheap: the functions are registered only where they are missing,
+    * so a connection bootstrap or a repeated call on an installed
+    * session runs no Catalyst analysis. Reading a catalog table, bare or
+    * qualified, needs [[ResolvePgCatalog]] (installed by
+    * [[graft.plans.GraftExtensions]]). */
   def registerAll(spark: SparkSession): Unit = {
-    registerViews(spark)
     registerFunctions(spark)
     // lazily instantiated by the CatalogManager on first pg_catalog.*
     // reference (the reference registers its provider the same way,
@@ -368,37 +356,6 @@ object PgCompat extends Serializable {
       classOf[PgCatalogPlugin].getName)
     spark.conf.set("spark.sql.catalog.information_schema",
       classOf[InfoSchemaPlugin].getName)
-  }
-
-  /** The emulation views' analyzed definitions, built on the first
-    * session that registers them and shared (read-only) by every
-    * session after: the rows are static, so one analysis per JVM
-    * serves every connection. */
-  @volatile private var builtViews: Seq[(String, TemporaryViewRelation)] = _
-
-  private def views(spark: SparkSession): Seq[(String, TemporaryViewRelation)] = {
-    if (builtViews == null) synchronized {
-      if (builtViews == null) {
-        import scala.jdk.CollectionConverters._
-        val catalog = spark.sessionState.catalog
-        builtViews = tableDefs.map { case (name, schema, rows) =>
-          spark.createDataFrame(rows.asJava, schema).createOrReplaceTempView(name)
-          name -> catalog.getRawTempView(name).get
-        }
-      }
-    }
-    builtViews
-  }
-
-  /** (Re)install every emulation view on the session, replacing
-    * whatever it holds under those names. The view definitions are
-    * shared across sessions, but each session's temp-view map is its
-    * own: a view a client creates or replaces stays in that session. */
-  def registerViews(spark: SparkSession): Unit = {
-    val catalog = spark.sessionState.catalog
-    views(spark).foreach { case (name, view) =>
-      catalog.createTempView(name, view, overrideIfExists = true)
-    }
   }
 
   /** Register the PG-compat functions unless the session already has

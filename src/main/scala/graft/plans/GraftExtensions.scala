@@ -24,6 +24,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // federation scans resolve against the session owning the query
     // (never SparkSession.active — wrong under concurrent sessions)
     e.injectResolutionRule(graft.sources.ResolveFederationScans.apply)
+    // pg_catalog / information_schema tables, bare or qualified, become
+    // driver-side LocalRelations of the analyzing session's rows
+    e.injectResolutionRule(graft.pg.ResolvePgCatalog.apply)
   }
 }
 
@@ -93,16 +96,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
         }, OneRowRelation())
       }
       if (projects.size == 1) projects.head else Union(projects)
-    // public.* qualifiers resolve to the session temp views registered
-    // by PgCompat (the reference registers its catalog tables under both
-    // schemas, catalog/src/postgres/mod.rs:25-52). pg_catalog.* needs no
-    // rewrite: it resolves through the PgCatalogPlugin V2 catalog.
-    case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-        if r.multipartIdentifier.size == 2 &&
-          r.multipartIdentifier.head.toLowerCase == "public" &&
-          r.multipartIdentifier(1).toLowerCase.startsWith("pg_") =>
-      org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-        Seq(r.multipartIdentifier(1)), r.options, r.isStreaming)
   }
 
   private def hasFunction(e: Expression): Boolean =

@@ -22,7 +22,7 @@ object PgCatalog {
 
   /** The pg_type table (the reference's 28 rows + the geometry
     * extension type), read through its pg_catalog-qualified name
-    * (parser strips the schema onto the temp view). */
+    * (served as a driver-side LocalRelation by ResolvePgCatalog). */
   private val pg01 = QDef(
     "pg01_pg_type",
     s"""SELECT * FROM (VALUES

@@ -268,8 +268,12 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
       // session mounted before serving (Tables.registerViews) are
       // snapshotted in — the PG-permanent-table role; temp views a
       // client creates stay invisible to every other client. The
-      // bootstrap runs no Catalyst analysis: PgCompat installs catalog
-      // views whose plans were built once per JVM.
+      // bootstrap runs no Catalyst analysis and installs no catalog
+      // view: PgCompat registers the compat functions and the catalog
+      // confs, and GraftExtensions' ResolvePgCatalog answers pg_catalog
+      // names, bare or qualified, during each statement's analysis. A
+      // client's own temp view of a catalog name shadows it there,
+      // for that connection only.
       val sess = spark.newSession()
       connSess = sess
       // PostgreSQL treats double-quoted tokens as IDENTIFIERS, always —
@@ -440,20 +444,17 @@ final class PgServer(spark: SparkSession, port: Int = 5432,
   /** Copy the HOST session's local temp views into a fresh connection
     * session: `Tables.registerViews`-style mounts made before `serve`
     * play the role of PG permanent tables, so wire clients must see
-    * them. The catalog-emulation views PgCompat just registered on the
-    * connection session are left alone (same definitions either way).
-    * Snapshot-at-connect: mounts made after a connection opened appear
-    * to NEW connections only — matching how the reference builds each
-    * connection's context from the server's catalog at accept time. */
+    * them. Snapshot-at-connect: mounts made after a connection opened
+    * appear to NEW connections only — matching how the reference builds
+    * each connection's context from the server's catalog at accept
+    * time. The connection session is new, so it holds no view yet. */
   private def shareHostTempViews(sess: SparkSession): Unit = {
     val host = spark.sessionState.catalog
     val child = sess.sessionState.catalog
     host.listLocalTempViews("*").foreach { ident =>
-      val name = ident.table
-      if (child.getRawTempView(name).isEmpty)
-        host.getRawTempView(name).foreach { view =>
-          child.createTempView(name, view, overrideIfExists = false)
-        }
+      host.getRawTempView(ident.table).foreach { view =>
+        child.createTempView(ident.table, view, overrideIfExists = false)
+      }
     }
   }
 

@@ -29,9 +29,71 @@ class PgCompatSpec extends GraftSuite {
     PgCompat.registerAll(spark)
     assert(spark.sql("SELECT count(*) FROM pg_catalog.pg_type").head().getLong(0) == 29)
     assert(spark.sql("SELECT count(*) FROM public.pg_database").head().getLong(0) == 1)
-    // the BARE temp view keeps the reference's empty pg_class
-    // (pg_class.rs:58-70); the pg_catalog-qualified one is live
-    assert(spark.sql("SELECT count(*) FROM pg_class").head().getLong(0) == 0)
+    // bare pg_class is the live catalog, as in PostgreSQL: it equals the
+    // pg_catalog-qualified one
+    spark.range(1).createOrReplaceTempView("bare_class_probe")
+    try {
+      val bare = sorted(spark.sql("SELECT * FROM pg_class"))
+      assert(bare.exists(_.contains("bare_class_probe")), bare)
+      assert(bare == sorted(spark.sql("SELECT * FROM pg_catalog.pg_class")))
+    } finally spark.catalog.dropTempView("bare_class_probe")
+  }
+
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("every catalog table answers the same under its bare, public. and pg_catalog. names") {
+    PgCompat.registerAll(spark)
+    val names = PgCompat.catalogTables.keySet
+    assert(names.size == 24 && names("pg_class") && names("pg_attribute"), names)
+    for (n <- names.toSeq.sorted) {
+      val qualified = sorted(spark.sql(s"SELECT * FROM pg_catalog.$n"))
+      assert(sorted(spark.sql(s"SELECT * FROM $n")) == qualified, n)
+      assert(sorted(spark.sql(s"SELECT * FROM public.$n")) == qualified, n)
+    }
+  }
+
+  test("bare pg_attribute resolves to the live catalog") {
+    PgCompat.registerAll(spark)
+    spark.range(1).selectExpr("id AS attr_probe_col").createOrReplaceTempView("attr_probe")
+    try {
+      assert(spark.sql("SELECT attname FROM pg_attribute " +
+        "WHERE attname = 'attr_probe_col'").count() == 1)
+    } finally spark.catalog.dropTempView("attr_probe")
+  }
+
+  test("a temp view or CTE named like a catalog table shadows the bare name in its own session only") {
+    PgCompat.registerAll(spark)
+    val other = spark.newSession()
+    PgCompat.registerAll(other)
+    spark.sql("CREATE OR REPLACE TEMP VIEW pg_type AS SELECT 1 AS oid")
+    try {
+      assert(spark.sql("SELECT * FROM pg_type").collect().map(_.getInt(0)).toSeq == Seq(1))
+      // the qualified names still reach the catalog table
+      assert(spark.sql("SELECT count(*) FROM pg_catalog.pg_type").head().getLong(0) == 29)
+      assert(spark.sql("SELECT count(*) FROM public.pg_type").head().getLong(0) == 29)
+      assert(other.sql("SELECT count(*) FROM pg_type").head().getLong(0) == 29)
+    } finally spark.catalog.dropTempView("pg_type")
+    assert(spark.sql("SELECT count(*) FROM pg_type").head().getLong(0) == 29)
+    assert(spark.sql("WITH pg_type AS (SELECT 7 AS oid) SELECT oid FROM pg_type")
+      .collect().map(_.getInt(0)).toSeq == Seq(7))
+  }
+
+  test("a view over pg_class does not re-enter the pg_class snapshot") {
+    PgCompat.registerAll(spark)
+    spark.sql("CREATE OR REPLACE TEMP VIEW class_names AS SELECT relname FROM pg_class")
+    try {
+      assert(spark.sql("SELECT relname FROM pg_class WHERE relname = 'class_names'")
+        .count() == 1)
+      assert(spark.sql("SELECT * FROM class_names WHERE relname = 'class_names'")
+        .count() == 1)
+    } finally spark.catalog.dropTempView("class_names")
+  }
+
+  test("information_schema lists no catalog table as a user table") {
+    PgCompat.registerAll(spark)
+    assert(spark.sql("SELECT table_name FROM information_schema.tables " +
+      "WHERE table_name LIKE 'pg\\_%'").isEmpty)
   }
 
   test("pg_catalog.pg_class / pg_attribute snapshot the live catalog") {
@@ -100,8 +162,9 @@ class PgCompatSpec extends GraftSuite {
     val df = spark.sql(
       "SELECT typname FROM pg_catalog.pg_type WHERE oid = 1043")
     assert(df.collect().map(_.getString(0)).toSeq == Seq("varchar"))
+    // answered on the driver: a LocalTableScan, no DSv2 scan
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BatchScan"), plan) // DSv2 scan, no temp view
+    assert(plan.contains("LocalTableScan") && !plan.contains("BatchScan"), plan)
     // joins across the catalog boundary work
     val n = spark.sql(
       """SELECT count(*) FROM pg_catalog.pg_type t

@@ -11,8 +11,7 @@ import org.apache.spark.sql.types._
   * views, columns) when a query reading them is analyzed
   * ([[ResolvePgCatalog]]).
   */
-final class InfoSchemaPlugin
-    extends ReadOnlyCatalog("information_schema", InfoSchemaPlugin.tables)
+final class InfoSchemaPlugin extends ReadOnlyCatalog(InfoSchemaPlugin.tables)
 
 object InfoSchemaPlugin {
 

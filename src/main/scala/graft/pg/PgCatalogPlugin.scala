@@ -24,13 +24,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * it on first reference. Reads of its tables, qualified or bare, are
   * answered by [[ResolvePgCatalog]].
   */
-final class PgCatalogPlugin extends ReadOnlyCatalog("pg_catalog", PgCompat.catalogTables)
+final class PgCatalogPlugin extends ReadOnlyCatalog(PgCompat.catalogTables)
 
 /** Read-only TableCatalog over a fixed name → table map. */
-abstract class ReadOnlyCatalog(defaultName: String, tables: Map[String, PgTable])
-    extends TableCatalog {
+abstract class ReadOnlyCatalog(tables: Map[String, PgTable]) extends TableCatalog {
 
-  private var catalogName = defaultName
+  private var catalogName: String = _
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit =
     catalogName = name
@@ -68,12 +67,11 @@ abstract class ReadOnlyCatalog(defaultName: String, tables: Map[String, PgTable]
   * session without that rule fails the read at analysis ("does not
   * support batch scan"). */
 final class PgTable(tableName: String, tableSchema: StructType,
-    rowsOf: SparkSession => Seq[Row]) extends Table {
+    val rows: SparkSession => Seq[Row]) extends Table {
   override def name(): String = tableName
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.Collections.emptySet()
-  def rows(spark: SparkSession): Seq[Row] = rowsOf(spark)
 }
 
 /** Analyzer rule (injected by [[graft.plans.GraftExtensions]]) that

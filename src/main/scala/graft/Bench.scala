@@ -135,7 +135,10 @@ object Bench {
     // scan-stack init), not box drift. One full pass at sf0.001 pre-pays
     // those per-PLAN costs (codegen caches key on generated source,
     // which is fixture-path-independent) in a fraction of a measured
-    // pass, so pass1 measures the same warm machine pass2 does.
+    // pass, so pass1 measures the same warm machine pass2 does. This
+    // holds only because Graft.session sizes Spark's JVM-wide codegen
+    // cache to the whole registry's classes: at Spark's default of 100
+    // entries a pass evicts everything the warm-up compiled.
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
       new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001").getPath)
     val warmupSecs: Option[Double] =

@@ -22,8 +22,20 @@ import org.apache.spark.sql.SparkSession
   * qualified, are read only on a session with the extensions: on a
   * session wired by [[install]] alone, `pg_catalog.*` resolves but its
   * read fails at analysis.
+  *
+  * Spark caches generated classes (whole-stage codegen, projections,
+  * orderings) JVM-wide, in a cache sized by the first context that
+  * generates code. [[session]] sizes it to [[CodegenCacheEntries]]; a
+  * context built elsewhere and wired with [[install]] keeps Spark's
+  * 100 entries, and every pass over more plans than that recompiles.
   */
 object Graft {
+
+  /** `spark.sql.codegen.cache.maxEntries` for sessions built here: the
+    * smallest power of two above the ~3,440 distinct generated classes
+    * of one pass over every registered query. Spark reads it once, when
+    * the first context generates code, so it goes on the builder. */
+  val CodegenCacheEntries: Int = 4096
 
   /** Register every function, catalog, and compat surface on an
     * existing session (idempotent). */
@@ -44,6 +56,7 @@ object Graft {
       .master(master)
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .withExtensions(new graft.plans.GraftExtensions)
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n))
     val spark = b.getOrCreate()

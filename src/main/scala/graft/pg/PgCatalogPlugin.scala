@@ -4,7 +4,8 @@ import java.util
 import java.util.Locale
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, ResolvedTable,
+  UnresolvedRelation, UnresolvedTableOrView}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -84,7 +85,10 @@ final class PgTable(tableName: String, tableSchema: StructType,
   *  - every relation over a [[PgTable]], bare or qualified (`pg_catalog`,
   *    `information_schema`), becomes a `LocalRelation` of the rows
   *    computed for `session`, so `ConvertToLocalRelation` folds the
-  *    filters and projections over it.
+  *    filters and projections over it;
+  *  - a table command's bare or `public.` name (`DESCRIBE pg_type`,
+  *    `SHOW COLUMNS IN pg_type`) resolves to the `pg_catalog` table,
+  *    with the same temp-view shadowing.
   */
 final case class ResolvePgCatalog(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -102,6 +106,12 @@ final case class ResolvePgCatalog(session: SparkSession) extends Rule[LogicalPla
       bareOrPublic(u.multipartIdentifier).fold[LogicalPlan](u) { t =>
         SubqueryAlias(u.multipartIdentifier, LocalRelation.fromExternalRows(
           DataTypeUtils.toAttributes(t.schema()), t.rows(session)))
+      }
+    case u: UnresolvedTableOrView =>
+      bareOrPublic(u.multipartIdentifier).fold[LogicalPlan](u) { t =>
+        ResolvedTable.create(
+          session.sessionState.catalogManager.catalog("pg_catalog").asInstanceOf[TableCatalog],
+          Identifier.of(Array.empty, t.name()), t)
       }
     case r: DataSourceV2Relation => r.table match {
       case t: PgTable => LocalRelation.fromExternalRows(r.output, t.rows(session))

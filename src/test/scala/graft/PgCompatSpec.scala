@@ -79,6 +79,24 @@ class PgCompatSpec extends GraftSuite {
       .collect().map(_.getInt(0)).toSeq == Seq(7))
   }
 
+  test("table commands resolve bare and public. catalog names unless a temp view shadows them") {
+    PgCompat.registerAll(spark)
+    def names(sql: String): Seq[String] = spark.sql(sql).collect().map(_.getString(0)).toSeq
+    val columns = spark.table("pg_catalog.pg_type").columns.toSeq
+    val described = names("DESCRIBE pg_catalog.pg_type")
+    assert(described.take(columns.size) == columns, described)
+    assert(names("DESCRIBE pg_type") == described)
+    assert(names("DESCRIBE public.pg_type") == described)
+    assert(names("SHOW COLUMNS IN pg_type") == columns)
+    assert(names("SHOW COLUMNS IN public.pg_type") == columns)
+    spark.sql("CREATE OR REPLACE TEMP VIEW pg_type AS SELECT 1 AS shadow_col")
+    try {
+      assert(names("DESCRIBE pg_type") == Seq("shadow_col"))
+      assert(names("SHOW COLUMNS IN pg_type") == Seq("shadow_col"))
+      assert(names("DESCRIBE pg_catalog.pg_type") == described)
+    } finally spark.catalog.dropTempView("pg_type")
+  }
+
   test("a view over pg_class does not re-enter the pg_class snapshot") {
     PgCompat.registerAll(spark)
     spark.sql("CREATE OR REPLACE TEMP VIEW class_names AS SELECT relname FROM pg_class")

@@ -22,6 +22,7 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkSession.builder().master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
+    .config(SparkTestBase.CodegenCacheKey, Graft.CodegenCacheEntries)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
